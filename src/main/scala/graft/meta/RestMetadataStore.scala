@@ -4,7 +4,7 @@ import java.net.URLEncoder
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.json4s._
-import org.json4s.jackson.{JsonMethods, Serialization}
+import org.json4s.jackson.JsonMethods
 
 import graft.commit._
 
@@ -168,8 +168,8 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
     val spec = m.specs.find(_.specId == m.defaultSpecId).getOrElse(PartitionSpecDef(0, Nil))
     val r = call("POST", s"/v1/namespaces/${enc(ns)}/tables", Some(JObject(
       "name" -> JString(t),
-      "schema" -> JsonMethods.parse(Serialization.write(schema)(TableMetadata.formats)),
-      "partition-spec" -> JsonMethods.parse(Serialization.write(spec.fields)(TableMetadata.formats)),
+      "schema" -> Extraction.decompose(schema)(TableMetadata.formats),
+      "partition-spec" -> Extraction.decompose(spec.fields)(TableMetadata.formats),
       "properties" -> JObject(m.properties.toList.map { case (k, v) => k -> (JString(v): JValue) }))))
     if (r.code == 409) throw new IllegalStateException(s"table exists: ${(ns :+ t).mkString(".")}")
     expect(r, Set(200), ns, Some(t)); ()
@@ -212,12 +212,12 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
   }
 
   private def statsJson(stats: Map[String, List[ColStatDef]]): JValue =
-    JsonMethods.parse(Serialization.write(stats)(TableMetadata.formats))
+    Extraction.decompose(stats)(TableMetadata.formats)
 
   private def updateJson(u: MetadataUpdate): JValue = u match {
     case MetadataUpdate.AddSchema(s) => JObject(
       "action" -> JString("add-schema"),
-      "schema" -> JsonMethods.parse(Serialization.write(s)(TableMetadata.formats)))
+      "schema" -> Extraction.decompose(s)(TableMetadata.formats))
     case MetadataUpdate.SetCurrentSchema(id) => JObject(
       "action" -> JString("set-current-schema"), "schema-id" -> JInt(id))
     case MetadataUpdate.SetProperties(p) => JObject(
@@ -230,19 +230,19 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
       "action" -> JString("set-location"), "location" -> JString(l))
     case MetadataUpdate.AddSnapshot(s) => JObject(
       "action" -> JString("add-snapshot"),
-      "snapshot" -> JsonMethods.parse(Serialization.write(s)(TableMetadata.formats)))
+      "snapshot" -> Extraction.decompose(s)(TableMetadata.formats))
     case MetadataUpdate.SetCurrentSnapshot(id) => JObject(
       "action" -> JString("set-current-snapshot"), "snapshot-id" -> JInt(id))
     case MetadataUpdate.OverwritePartitions(files, pvs, ts, stats, extra) => JObject(
       "action" -> JString("overwrite-partitions"),
       "files" -> JArray(files.map(JString(_))),
-      "partition-values" -> JsonMethods.parse(Serialization.write(pvs)(TableMetadata.formats)),
+      "partition-values" -> Extraction.decompose(pvs)(TableMetadata.formats),
       "timestamp-ms" -> JInt(ts),
       "file-stats" -> statsJson(stats),
       "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
     case MetadataUpdate.AddPartitionSpec(spec) => JObject(
       "action" -> JString("add-partition-spec"),
-      "spec" -> JsonMethods.parse(Serialization.write(spec)(TableMetadata.formats)))
+      "spec" -> Extraction.decompose(spec)(TableMetadata.formats))
     case MetadataUpdate.AppendFiles(files, ts, stats, extra) => JObject(
       "action" -> JString("append-files"),
       "files" -> JArray(files.map(JString(_))),
@@ -283,7 +283,7 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
       "action" -> JString("row-delta"),
       "added-files" -> JArray(added.map(JString(_))),
       "added-delete-files" ->
-        JsonMethods.parse(Serialization.write(deletes)(TableMetadata.formats)),
+        Extraction.decompose(deletes)(TableMetadata.formats),
       "timestamp-ms" -> JInt(ts),
       "file-stats" -> statsJson(stats),
       "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
@@ -291,7 +291,7 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
       "action" -> JString("rewrite-deletes"),
       "removed-delete-files" -> JArray(removed.map(JString(_))),
       "added-delete-files" ->
-        JsonMethods.parse(Serialization.write(added)(TableMetadata.formats)),
+        Extraction.decompose(added)(TableMetadata.formats),
       "timestamp-ms" -> JInt(ts),
       "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
     case other => throw new UnsupportedOperationException(

@@ -103,7 +103,7 @@ object SnapshotBodies {
         case Some(n) => reused += n; n
         case None =>
           val body = Body(s.files, s.fileStats, s.deleteFiles, s.fileSeqs)
-          val json = Serialization.write(body)
+          val json = MetaJson.body(body)
           val n = s"snap-${s.snapshotId}-${hashHex(json)}.body.json"
           out += ((n, json))
           cachePut(s"$scope/$n", body)
@@ -116,7 +116,7 @@ object SnapshotBodies {
     reused.result().distinct.foreach { n =>
       if (!exists(n))
         Option(cache.get(s"$scope/$n")).foreach(b =>
-          write(n, Serialization.write(b)))
+          write(n, MetaJson.body(b)))
     }
     m.copy(snapshots = slim, formatVersion = FormatVersion)
   }
@@ -133,7 +133,7 @@ object SnapshotBodies {
     slim.snapshots.flatMap(_.bodyRef).distinct.foreach { n =>
       if (!exists(n))
         Option(cache.get(s"$scope/$n")).foreach(b =>
-          write(n, Serialization.write(b)))
+          write(n, MetaJson.body(b)))
     }
 
   /** Re-inflate a loaded slim document: resolve each `bodyRef` through

@@ -117,7 +117,7 @@ final case class TableMetadata(
 object TableMetadata {
   implicit val formats: Formats = Serialization.formats(NoTypeHints)
 
-  def toJson(m: TableMetadata): String = Serialization.writePretty(m)
+  def toJson(m: TableMetadata): String = MetaJson.pretty(m)
   def fromJson(s: String): TableMetadata = {
     val m = Serialization.read[TableMetadata](s)
     // refuse documents from a NEWER writer: a format this reader does

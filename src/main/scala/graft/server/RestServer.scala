@@ -1,7 +1,9 @@
 package graft.server
 
+import java.io.OutputStreamWriter
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import com.fasterxml.jackson.core.JsonGenerator
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -36,11 +38,21 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
   server.createContext("/", handle _)
   // concurrent request handling (gin serves per-goroutine; handlers are
-  // stateless and the store's CAS protocol arbitrates writers)
-  server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+  // stateless and the store's CAS protocol arbitrates writers); threads
+  // are named after the port so a thread dump tells servers apart
+  private val pool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val port = server.getAddress.getPort
+    java.util.concurrent.Executors.newCachedThreadPool(
+      r => new Thread(r, s"graft-rest-$port-${n.incrementAndGet()}"))
+  }
+  server.setExecutor(pool)
 
   def start(): Int = { server.start(); server.getAddress.getPort }
-  def stop(): Unit = server.stop(0)
+
+  /** `HttpServer.stop` leaves its executor running, so the handler
+    * threads are shut down here. */
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
 
   // ---- middleware (requestID + access log + CORS + recovery) ------------
   // the reference's gin middleware stack: RequestLogger assigns a
@@ -140,13 +152,33 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
   private def body(ex: HttpExchange): JValue =
     JsonMethods.parse(new String(ex.getRequestBody.readAllBytes(), UTF_8))
 
-  private def json(ex: HttpExchange, code: Int, v: JValue): Unit = {
-    val bytes = JsonMethods.compact(JsonMethods.render(v)).getBytes(UTF_8)
-    ex.setAttribute("graft.size", bytes.length.toLong)
+  private def json(ex: HttpExchange, code: Int, v: JValue): Unit =
+    respond(ex, code)(JsonMethods.mapper.writeValue(_, v))
+
+  /** Send the JSON body `write` renders. The whole body is rendered
+    * before the headers go out, so a render failure still reaches the
+    * 500 envelope, and the response carries its exact Content-Length. */
+  private def respond(ex: HttpExchange, code: Int)(write: JsonGenerator => Unit): Unit = {
+    val buf = new BlockBuffer
+    val g = MetaJson.factory.createGenerator(new OutputStreamWriter(buf, UTF_8))
+    try write(g) finally g.close()
+    ex.setAttribute("graft.size", buf.size)
     ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length)
-    ex.getResponseBody.write(bytes)
+    ex.sendResponseHeaders(code, buf.size)
+    buf.writeTo(ex.getResponseBody)
   }
+
+  /** `{metadata-location, metadata[, config]}`, written in one pass. */
+  private def metadataResponse(ex: HttpExchange, location: String, m: TableMetadata,
+                               config: Option[Map[String, String]]): Unit =
+    respond(ex, 200) { g =>
+      g.writeStartObject()
+      g.writeStringField("metadata-location", location)
+      g.writeFieldName("metadata")
+      MetaJson.writeTable(g, m)
+      config.foreach { c => g.writeFieldName("config"); MetaJson.strings(g, c) }
+      g.writeEndObject()
+    }
 
   private def empty(ex: HttpExchange, code: Int): Unit =
     ex.sendResponseHeaders(code, -1)
@@ -256,10 +288,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
       case Some(want) => (catalog.metadataStore.loadVersion(n, t, want), want)
       case None => catalog.metadataStore.load(n, t)
     }
-    json(ex, 200, JObject(
-      "metadata-location" -> JString(catalog.metadataStore.metadataLocation(n, t, v)),
-      "metadata" -> JsonMethods.parse(TableMetadata.toJson(m)),
-      "config" -> toJObj(catalog.config(m.properties))))
+    metadataResponse(ex, catalog.metadataStore.metadataLocation(n, t, v), m,
+      Some(catalog.config(m.properties)))
   }
 
   private def loadTable(ex: HttpExchange, enc: String, t: String): Unit =
@@ -290,9 +320,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     val ups = (b \ "updates").extractOpt[List[JValue]].getOrElse(Nil).map(parseUpdate)
     catalog.commit(Identifier.of(ns(enc), t), reqs, ups)
     val (m, v) = catalog.metadataStore.load(ns(enc).toSeq, t)
-    json(ex, 200, JObject(
-      "metadata-location" -> JString(catalog.metadataStore.metadataLocation(ns(enc).toSeq, t, v)),
-      "metadata" -> JsonMethods.parse(TableMetadata.toJson(m))))
+    metadataResponse(ex, catalog.metadataStore.metadataLocation(ns(enc).toSeq, t, v), m,
+      None)
   }
 
   private def parseReq(j: JValue): Requirement = (j \ "type").extract[String] match {

@@ -2,15 +2,19 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.json4s._
-import org.json4s.jackson.JsonMethods
+import org.json4s.jackson.{JsonMethods, Serialization}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import graft.catalog.GraftCatalog
+import graft.meta.TableMetadata
 import graft.server.RestServer
 
 /** End-to-end round trips over the real wire protocol — the analogue of
@@ -325,5 +329,85 @@ class RestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.statusCode() == 204)
     assert(r.headers().firstValue("Access-Control-Allow-Methods").orElse("")
       .contains("DELETE"))
+  }
+
+  test("stop() ends the stopped server's handler threads") {
+    val s = new RestServer(catalog)
+    val port = s.start()
+    def handlers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith(s"graft-rest-$port-") && t.isAlive)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[Int] {
+      def call(): Int = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/health")).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).statusCode()
+    })).foreach(f => assert(f.get() == 200))
+    pool.shutdown()
+    assert(handlers.nonEmpty, "requests were served by no named handler thread")
+    s.stop()
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (handlers.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(handlers.isEmpty, s"handler threads outlived stop(): ${handlers.map(_.getName)}")
+  }
+
+  test("metadata responses: exact length, not chunked, the old pipeline's bytes") {
+    val ns = "bytes_rest"
+    val path = s"/v1/namespaces/$ns/tables"
+    def send(p: String, body: String = null): HttpResponse[Array[Byte]] = {
+      val b = HttpRequest.newBuilder(URI.create(base + p))
+      client.send((if (body == null) b.GET() else b.POST(HttpRequest.BodyPublishers.ofString(body)))
+        .build(), HttpResponse.BodyHandlers.ofByteArray())
+    }
+    // what the server sent before the single-pass writer: the document
+    // pretty-printed by json4s reflection, parsed back, printed compact
+    def oldPipeline(withConfig: Boolean): Array[Byte] = {
+      val (m, v) = catalog.metadataStore.load(Seq(ns), "t")
+      val config = if (!withConfig) Nil else List("config" -> JObject(
+        catalog.config(m.properties).toList.map { case (k, x) => k -> (JString(x): JValue) }))
+      JsonMethods.compact(JsonMethods.render(JObject(List(
+        "metadata-location" -> JString(catalog.metadataStore.metadataLocation(Seq(ns), "t", v)),
+        "metadata" -> JsonMethods.parse(Serialization.writePretty(m)(TableMetadata.formats)))
+        ++ config))).getBytes(UTF_8)
+    }
+    def check(r: HttpResponse[Array[Byte]], withConfig: Boolean): Unit = {
+      assert(r.statusCode() == 200, new String(r.body(), UTF_8))
+      val h = r.headers()
+      assert(h.firstValue("Content-Length").orElse("") == r.body().length.toString)
+      assert(!h.firstValue("Transfer-Encoding").isPresent)
+      val expected = oldPipeline(withConfig)
+      val at = java.util.Arrays.mismatch(r.body(), expected)
+      def near(b: Array[Byte]) = new String(b.slice(at - 60, at + 60), UTF_8)
+      assert(at == -1, s"bytes differ at $at:\n got: ${near(r.body())}\nwant: ${near(expected)}")
+      val rid = h.firstValue("X-Request-ID").get
+      val line = server.recentLogs.find(_.contains(s"requestId=$rid"))
+      assert(line.exists(_.endsWith(s" size=${r.body().length}")), s"log line: $line")
+    }
+
+    req("POST", "/v1/namespaces", s"""{"namespace":["$ns"]}""")
+    check(send(path, s"""{"name":"t","schema":$tableSchema,
+      |"properties":{"quote\\"d":"back\\\\slash \\u00e9\\u4e2d \\ud83d\\ude00 \\u0001"}}"""
+      .stripMargin), withConfig = true)
+    val stats = """"file-stats":{"a.parquet":[
+      |{"name":"id","min":"1","max":"9","nulls":0,"fieldId":1,"rows":9},
+      |{"name":"name","min":"a","max":"z","nulls":2}]}""".stripMargin
+    // enough files that every snapshot's list spans several 256 KB blocks
+    val many = (1 to 12000).map(i => s""""many/part-$i.parquet"""").mkString(",")
+    check(send(s"$path/t", s"""{"updates":[{"action":"append-files",
+      |"files":["a.parquet",$many],"timestamp-ms":1,$stats}]}""".stripMargin),
+      withConfig = false)
+    check(send(s"$path/t", """{"updates":[{"action":"append-files",
+      |"files":["b.parquet"],"timestamp-ms":2}]}""".stripMargin), withConfig = false)
+    check(send(s"$path/t", """{"updates":[{"action":"set-ref",
+      |"ref-name":"audit","snapshot-id":1,"ref-type":"tag"}]}""".stripMargin),
+      withConfig = false)
+    check(send(s"$path/t", """{"updates":[{"action":"row-delta",
+      |"added-files":["c.parquet"],"timestamp-ms":3,"added-delete-files":[
+      |{"path":"d.parquet","seq":0,"keyFieldIds":[1],"rows":1,"bytes":10}]}]}"""
+      .stripMargin), withConfig = false)
+    val load = send(s"$path/t")
+    check(load, withConfig = true)
+    val m = JsonMethods.parse(new String(load.body(), UTF_8)) \ "metadata"
+    assert(((m \ "snapshots")(2) \ "deleteFiles").extract[List[JValue]].size == 1)
+    assert((m \ "refs" \ "audit" \ "refType").extract[String] == "tag")
   }
 }
