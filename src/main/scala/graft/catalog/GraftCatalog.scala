@@ -15,8 +15,10 @@ import graft.meta._
 
 /** Spark DSv2 catalog with the semantics of the reference Iceberg REST
   * catalog server (all 15 operations of SURVEY.md §2.A), re-expressed on
-  * `TableCatalog with SupportsNamespaces` and backed by [[MetadataStore]]
-  * (versioned JSON metadata + CAS commits) instead of an HTTP service.
+  * `TableCatalog with SupportsNamespaces` and backed by a [[MetaStore]]
+  * (versioned JSON metadata + CAS commits: one protocol over one
+  * create-if-absent primitive, with POSIX, Hadoop and object-store
+  * adapters) instead of an HTTP service.
   *
   * Register with:
   * {{{
@@ -167,14 +169,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def createNamespace(namespace: Array[String],
                                metadata: util.Map[String, String]): Unit = {
-    if (store.namespaceExists(namespace.toSeq))
-      throw new NamespaceAlreadyExistsException(namespace)
+    val ns = namespace.toSeq
+    if (store.namespaceExists(ns)) throw new NamespaceAlreadyExistsException(namespace)
     // implicit parents are created as real namespaces (multi-level, like
-    // the reference's \x1F-joined levels, models.go:10)
-    namespace.toSeq.inits.toList.reverse.filter(_.nonEmpty).foreach { prefix =>
-      if (!store.namespaceExists(prefix))
-        store.createNamespace(prefix,
-          if (prefix == namespace.toSeq) metadata.asScala.toMap else Map.empty)
+    // the reference's \x1F-joined levels, models.go:10). The store's
+    // create-if-absent decides races: losing one is fine for an implicit
+    // parent, and "already exists" for the namespace asked for.
+    ns.inits.toList.reverse.filter(_.nonEmpty).foreach { prefix =>
+      val leaf = prefix == ns
+      if (leaf || !store.namespaceExists(prefix))
+        try store.createNamespace(prefix, if (leaf) metadata.asScala.toMap else Map.empty)
+        catch { case _: IllegalStateException =>
+          if (leaf) throw new NamespaceAlreadyExistsException(namespace)
+        }
     }
   }
 
@@ -344,7 +351,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       spec = PartitionSpecDef(0, specFields),
       order = SortOrderDef(0, Nil),
       props = defaults ++ props ++ overrides)
-    store.createTable(ns, ident.name, meta)
+    // a create that lost a race to another one reports "exists" too
+    try store.createTable(ns, ident.name, meta)
+    catch { case _: IllegalStateException => throw new TableAlreadyExistsException(ident) }
     loadTable(ident)
   }
 

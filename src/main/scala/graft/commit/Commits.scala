@@ -443,9 +443,11 @@ object MetadataUpdate {
 final class CommitFailedException(msg: String) extends RuntimeException(msg)
 
 /** What the committer needs from a metadata backend: versioned load and
-  * a single-winner conditional write. [[graft.meta.MetadataStore]] (local
-  * fs, hard-link CAS) and [[graft.meta.ConditionalPutMetadata]] (object
-  * store, If-None-Match PUT) both satisfy it. */
+  * a single-winner conditional write. [[graft.meta.BlobMetaStore]]
+  * implements it once over [[graft.meta.CasBlobStore]]'s create-if-absent
+  * (POSIX hard link, Hadoop rename, object-store If-None-Match PUT);
+  * [[graft.meta.ConditionalPutMetadata]] exposes that same protocol as a
+  * bare commit target. */
 trait CommitTarget {
   def load(ns: Seq[String], table: String): (TableMetadata, Int)
   def commit(ns: Seq[String], table: String, expectedVersion: Int,

@@ -1,136 +1,80 @@
 package graft.meta
 
-import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
-
-/** The one storage primitive the whole commit protocol needs: an atomic
-  * create-if-absent keyed blob write — exactly what object stores expose
-  * as conditional PUT (`If-None-Match: *` on S3/GCS/ABS). Everything else
-  * (load, version listing) is plain reads.
-  *
-  * [[MetadataStore]] realizes this on a local filesystem via hard-link
-  * creation; [[ConditionalPutMetadata]] realizes the same versioned
-  * commit protocol on any [[CasBlobStore]] — proving the CAS abstraction
-  * documented at [[MetadataStore]] holds beyond local fs (the reference
-  * swaps glue/rest/sql catalog backends the same way, `main.go:13-15`).
-  */
-trait CasBlobStore {
-  /** Atomically create `key` iff absent. False = key already existed. */
-  def putIfAbsent(key: String, content: Array[Byte]): Boolean
-  def get(key: String): Option[Array[Byte]]
-  def listPrefix(prefix: String): Seq[String]
-  /** Cheap existence probe (object stores: HEAD, not GET). */
-  def contains(key: String): Boolean = get(key).isDefined
-  /** Delete one blob; false when absent. Default: unsupported (a
-    * read-mostly backend still commits fine; GC just can't run). */
-  def delete(key: String): Boolean = false
-  /** Blob age for GC grace windows; None = unknown (never GC'd). */
-  def modifiedMs(key: String): Option[Long] = None
-}
 
 /** In-memory object store with conditional-PUT semantics — the test
   * double for S3-style backends (putIfAbsent = ConcurrentHashMap
-  * putIfAbsent, the same linearizable create-if-absent guarantee). */
+  * putIfAbsent, the same linearizable create-if-absent guarantee). Like
+  * an object store it has no directories: a "directory" is the set of
+  * keys under its prefix. Each instance has its own root, so body-cache
+  * scopes of two stores never collide. */
 final class InMemoryBlobStore extends CasBlobStore {
   private val blobs = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-  private val stamps = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+  private val stamps = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  val root: String = s"mem://${java.util.UUID.randomUUID()}"
+
+  private def under(dir: String): List[String] =
+    blobs.keySet.asScala.filter(_.startsWith(dir + "/")).toList
+
   def putIfAbsent(key: String, content: Array[Byte]): Boolean = {
     val won = blobs.putIfAbsent(key, content) == null
     if (won) stamps.put(key, System.currentTimeMillis())
     won
   }
+  def put(key: String, content: Array[Byte]): Unit = {
+    blobs.put(key, content)
+    stamps.put(key, System.currentTimeMillis())
+  }
   def get(key: String): Option[Array[Byte]] = Option(blobs.get(key))
-  def listPrefix(prefix: String): Seq[String] =
-    blobs.keys.asScala.filter(_.startsWith(prefix)).toSeq
-  override def contains(key: String): Boolean = blobs.containsKey(key)
-  override def delete(key: String): Boolean = {
+  def contains(key: String): Boolean =
+    blobs.containsKey(key) || blobs.keySet.asScala.exists(_.startsWith(key + "/"))
+  def list(dir: String): Seq[String] =
+    under(dir).map(_.substring(dir.length + 1).takeWhile(_ != '/')).distinct
+  def delete(key: String): Boolean = {
     stamps.remove(key)
     blobs.remove(key) != null
   }
-  override def modifiedMs(key: String): Option[Long] =
-    Option(stamps.get(key))
+  def deleteTree(dir: String): Unit = (dir :: under(dir)).foreach(delete)
+  def move(from: String, to: String): Unit = under(from).foreach { k =>
+    get(k).foreach(put(to + k.substring(from.length), _))
+    delete(k)
+  }
+  def modifiedMs(key: String): Option[Long] = Option(stamps.get(key)).map(_.longValue)
+  def size(key: String): Option[Long] = get(key).map(_.length.toLong)
+  def listParquet(dir: String): List[String] =
+    under(dir).filter(_.endsWith(".parquet")).map(_.substring(dir.length + 1))
+  def importFile(src: String, dst: String): Unit =
+    if (!putIfAbsent(dst, get(src).getOrElse(throw new java.io.FileNotFoundException(src))))
+      throw new java.nio.file.FileAlreadyExistsException(dst)
 }
 
-/** Versioned table metadata over a [[CasBlobStore]]: one immutable JSON
-  * blob per version at `<ns…>/<table>/metadata/v<N>.metadata.json`, the
-  * current version is the max present, and a commit is a single
-  * conditional PUT of version N+1 — identical protocol to
-  * [[MetadataStore]], different substrate. Implements [[CommitTarget]]
-  * so [[graft.commit.Committer]] drives it unchanged. */
+/** Versioned table metadata over any [[CasBlobStore]] — the
+  * [[BlobMetaStore]] protocol, with the commit-path surface object-store
+  * callers use: one immutable blob per version, the current version is
+  * the max present, and a commit is a single conditional PUT of version
+  * N+1. Implements [[graft.commit.CommitTarget]] so
+  * [[graft.commit.Committer]] drives it unchanged. */
 final class ConditionalPutMetadata(blobs: CasBlobStore)
   extends graft.commit.CommitTarget {
 
-  private val VersionRe = ".*/v(\\d+)\\.metadata\\.json$".r
+  private val store = new BlobMetaStore(blobs)
 
-  private def prefix(ns: Seq[String], t: String): String =
-    (ns :+ t).mkString("/") + "/metadata/"
-  private def key(ns: Seq[String], t: String, v: Int): String =
-    prefix(ns, t) + s"v$v.metadata.json"
+  /** Create v1 iff absent; false when another create won. No namespace
+    * is required: object stores have no directories to check. */
+  def createTable(ns: Seq[String], t: String, m: TableMetadata): Boolean =
+    store.commit(ns, t, 0, m)
 
-  private def bodyExists(ns: Seq[String], t: String)(name: String): Boolean =
-    blobs.contains(prefix(ns, t) + name)
-  private def bodyWrite(ns: Seq[String], t: String)(name: String,
-                                                    json: String): Unit =
-    blobs.putIfAbsent(prefix(ns, t) + name, json.getBytes(UTF_8))
-
-  /** Externalize snapshot payloads (see [[SnapshotBodies]]): body blobs
-    * land — and reused references re-verify — before the version PUT; a
-    * conditional PUT losing to an identical content-addressed blob is a
-    * no-op by construction. */
-  private def writeBodies(ns: Seq[String], t: String,
-                          m: TableMetadata): TableMetadata =
-    SnapshotBodies.persist(prefix(ns, t), m,
-      bodyExists(ns, t), bodyWrite(ns, t))
+  def currentVersion(ns: Seq[String], t: String): Int = store.currentVersion(ns, t)
+  def load(ns: Seq[String], t: String): (TableMetadata, Int) = store.load(ns, t)
+  def loadVersion(ns: Seq[String], t: String, v: Int): TableMetadata =
+    store.loadVersion(ns, t, v)
+  def commit(ns: Seq[String], t: String, expectedVersion: Int,
+             next: TableMetadata): Boolean = store.commit(ns, t, expectedVersion, next)
 
   /** GC body blobs no retained version references — lost CAS races on
-    * this substrate leak one content-addressed blob each. Blobs whose
-    * age the backend cannot report are never deleted (the grace window
-    * is the only protection for bodies staged by in-flight commits). */
+    * this substrate leak one content-addressed blob each. */
   def pruneSnapshotBodies(ns: Seq[String], t: String,
-                          live: Set[String], graceMs: Long): Int = {
-    var n = 0
-    blobs.listPrefix(prefix(ns, t)).filter(_.endsWith(".body.json"))
-      .foreach { key =>
-        val name = key.stripPrefix(prefix(ns, t))
-        val oldEnough = blobs.modifiedMs(key)
-          .exists(_ <= System.currentTimeMillis() - graceMs)
-        if (!live.contains(name) && oldEnough && blobs.delete(key)) n += 1
-      }
-    n
-  }
-
-  def createTable(ns: Seq[String], t: String, m: TableMetadata): Boolean =
-    blobs.putIfAbsent(key(ns, t, 1),
-      TableMetadata.toJson(writeBodies(ns, t, m)).getBytes(UTF_8))
-
-  def currentVersion(ns: Seq[String], t: String): Int =
-    blobs.listPrefix(prefix(ns, t))
-      .collect { case VersionRe(v) => v.toInt }.maxOption.getOrElse(0)
-
-  override def load(ns: Seq[String], t: String): (TableMetadata, Int) = {
-    val v = currentVersion(ns, t)
-    require(v > 0, s"no such table ${(ns :+ t).mkString(".")}")
-    (loadVersion(ns, t, v), v)
-  }
-
-  def loadVersion(ns: Seq[String], t: String, v: Int): TableMetadata = {
-    val slim = TableMetadata.fromJson(new String(
-      blobs.get(key(ns, t, v)).getOrElse(
-        throw new IllegalStateException(s"missing version $v")), UTF_8))
-    SnapshotBodies.inflate(prefix(ns, t), slim, name =>
-      new String(blobs.get(prefix(ns, t) + name).getOrElse(
-        throw new IllegalStateException(s"missing snapshot body $name")), UTF_8))
-  }
-
-  override def commit(ns: Seq[String], t: String, expectedVersion: Int,
-                      next: TableMetadata): Boolean = {
-    val slim = writeBodies(ns, t, next)
-    val won = blobs.putIfAbsent(key(ns, t, expectedVersion + 1),
-      TableMetadata.toJson(slim).getBytes(UTF_8))
-    // heal bodies a GC pruned while this committer stalled past the
-    // grace window — the PUT won, so the content must be present
-    if (won) SnapshotBodies.ensure(prefix(ns, t), slim,
-      bodyExists(ns, t), bodyWrite(ns, t))
-    won
-  }
+                          live: Set[String], graceMs: Long): Int =
+    store.pruneSnapshotBodies(ns, t, live, graceMs)
 }

@@ -1,228 +1,78 @@
 package graft.meta
 
-import java.nio.charset.StandardCharsets.UTF_8
+import java.io.FileNotFoundException
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.json4s._
-import org.json4s.jackson.Serialization
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 
-/** [[MetaStore]] over the Hadoop FileSystem API — the store a cluster
-  * points at a non-POSIX warehouse (`hdfs://`, `abfs://`, a MiniCluster,
-  * or any registered `fs.<scheme>.impl`). Same layout and version-file
-  * protocol as [[MetadataStore]]; the reference reaches the same class
-  * of backends through iceberg-go's FileIO config
-  * (`/root/reference/configs/.iceberg-go.yaml:7-10`).
-  *
-  * CAS primitive: write the full document to a temp file, then
-  * `rename(tmp, v<N>.metadata.json)`. The Hadoop rename contract this
-  * relies on — atomic, REFUSES an existing destination — holds on HDFS
-  * and ABFS; exactly one of two racing committers' renames succeeds,
-  * and the version file is never observable partially written (content
-  * lands before the name does). Object stores whose rename is
-  * copy+delete must use [[ConditionalPutMetadata]]'s If-None-Match PUT
-  * instead — the seam [[graft.commit.CommitTarget]] exists for.
-  */
-final class HadoopMetadataStore(val warehouse: String) extends MetaStore {
-
-  private val NsMarker = ".namespace.json"
-  private implicit val formats: Formats = Serialization.formats(NoTypeHints)
-
-  private val root = new Path(warehouse)
-  // driver-side store: the session's Hadoop conf carries fs.<scheme>.impl
-  // and credentials; fall back to defaults when no session exists yet
-  private val fs: FileSystem = root.getFileSystem(
+/** The [[MetaStore]] protocol over the Hadoop FileSystem API — the store
+  * a cluster points at a non-POSIX warehouse (`hdfs://`, `abfs://`, a
+  * MiniCluster, or any registered `fs.<scheme>.impl`): [[BlobMetaStore]]
+  * over [[HadoopBlobStore]]. The reference reaches the same class of
+  * backends through iceberg-go's FileIO config
+  * (`reference/configs/.iceberg-go.yaml:7-10`). The driver-side
+  * session's Hadoop conf carries `fs.<scheme>.impl` and credentials;
+  * defaults apply when no session exists yet. */
+final class HadoopMetadataStore(warehouse: String)
+  extends BlobMetaStore(new HadoopBlobStore(warehouse,
     org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration()))
+      .map(_.sessionState.newHadoopConf()).getOrElse(new Configuration())))
 
-  private def nsPath(ns: Seq[String]): Path =
-    ns.foldLeft(root)(new Path(_, _))
-  private def tablePath(ns: Seq[String], t: String): Path =
-    new Path(nsPath(ns), t)
-  private def metaDir(ns: Seq[String], t: String): Path =
-    new Path(tablePath(ns, t), "metadata")
+/** [[CasBlobStore]] over a Hadoop FileSystem. Create-if-absent writes the
+  * full content to a temp file, then renames it into place. The Hadoop
+  * rename contract this relies on — atomic, REFUSES an existing
+  * destination — holds on HDFS and ABFS: exactly one of two racing
+  * creates wins, and the target is never observable partially written.
+  * Object stores whose rename is copy+delete need a conditional-PUT
+  * adapter instead (see [[MetaStore.forWarehouse]]). Keys are Hadoop
+  * path strings. */
+final class HadoopBlobStore(val root: String, conf: Configuration) extends CasBlobStore {
 
-  private def readString(p: Path): String = {
-    val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, UTF_8)
-  }
+  private val fs: FileSystem = new Path(root).getFileSystem(conf)
 
-  private def writeFile(p: Path, content: String, overwrite: Boolean): Unit = {
+  override def resolve(dir: String, name: String): String =
+    new Path(new Path(dir), name).toString
+
+  private def write(p: Path, content: Array[Byte], overwrite: Boolean): Unit = {
     val out = fs.create(p, overwrite)
-    try out.write(content.getBytes(UTF_8)) finally out.close()
+    try out.write(content) finally out.close()
   }
 
-  /** Atomic create-if-absent with full content (the CAS): temp write +
-    * rename-refusing-existing-destination. */
-  private def writeNew(p: Path, content: String): Unit = {
-    val tmp = new Path(p.getParent,
-      "." + p.getName + ".tmp." + java.util.UUID.randomUUID().toString)
-    writeFile(tmp, content, overwrite = false)
-    val won = try fs.rename(tmp, p) finally fs.delete(tmp, false)
-    if (!won) throw new java.nio.file.FileAlreadyExistsException(p.toString)
+  def putIfAbsent(key: String, content: Array[Byte]): Boolean = {
+    val p = new Path(key)
+    val tmp = new Path(p.getParent, "." + p.getName + ".tmp." + java.util.UUID.randomUUID())
+    write(tmp, content, overwrite = false)
+    try fs.rename(tmp, p) finally fs.delete(tmp, false)
   }
 
-  // ---- namespaces -------------------------------------------------------
+  def put(key: String, content: Array[Byte]): Unit = write(new Path(key), content, overwrite = true)
 
-  def namespaceExists(ns: Seq[String]): Boolean =
-    ns.nonEmpty && fs.isFile(new Path(nsPath(ns), NsMarker))
+  def get(key: String): Option[Array[Byte]] =
+    try { val in = fs.open(new Path(key)); try Some(in.readAllBytes()) finally in.close() }
+    catch { case _: FileNotFoundException => None }
 
-  def createNamespace(ns: Seq[String], props: Map[String, String]): Unit = {
-    require(ns.nonEmpty && ns.forall(_.nonEmpty), s"invalid namespace ${ns.mkString(".")}")
-    if (namespaceExists(ns))
-      throw new IllegalStateException(s"namespace exists: ${ns.mkString(".")}")
-    fs.mkdirs(nsPath(ns))
-    writeFile(new Path(nsPath(ns), NsMarker), Serialization.write(props),
-      overwrite = true)
-  }
+  def contains(key: String): Boolean = fs.exists(new Path(key))
 
-  def loadNamespace(ns: Seq[String]): Map[String, String] = {
-    if (!namespaceExists(ns)) throw noSuchNamespace(ns)
-    Serialization.read[Map[String, String]](
-      readString(new Path(nsPath(ns), NsMarker)))
-  }
+  def list(dir: String): Seq[String] =
+    try fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+    catch { case _: FileNotFoundException => Nil }
 
-  def setNamespaceProperties(ns: Seq[String], props: Map[String, String]): Unit = {
-    if (!namespaceExists(ns)) throw noSuchNamespace(ns)
-    writeFile(new Path(nsPath(ns), NsMarker), Serialization.write(props),
-      overwrite = true)
-  }
+  def delete(key: String): Boolean = fs.delete(new Path(key), false)
+  def deleteTree(dir: String): Unit = fs.delete(new Path(dir), true)
+  override def mkdirs(dir: String): Unit = fs.mkdirs(new Path(dir))
 
-  def listNamespaces(parent: Seq[String]): Seq[Seq[String]] = {
-    val base = if (parent.isEmpty) root else nsPath(parent)
-    if (parent.nonEmpty && !namespaceExists(parent)) throw noSuchNamespace(parent)
+  def move(from: String, to: String): Unit =
+    if (!fs.rename(new Path(from), new Path(to)))
+      throw new java.io.IOException(s"rename failed: $from -> $to")
+
+  private def status(key: String) =
+    try Some(fs.getFileStatus(new Path(key))) catch { case _: FileNotFoundException => None }
+  def modifiedMs(key: String): Option[Long] = status(key).map(_.getModificationTime)
+  def size(key: String): Option[Long] = status(key).map(_.getLen)
+
+  def listParquet(dir: String): List[String] = {
+    val base = new Path(dir)
     if (!fs.exists(base)) return Nil
-    fs.listStatus(base).toSeq
-      .filter(st => st.isDirectory &&
-        fs.isFile(new Path(st.getPath, NsMarker)))
-      .map(st => parent :+ st.getPath.getName).sortBy(_.mkString(""))
-  }
-
-  def dropNamespace(ns: Seq[String]): Boolean = {
-    if (!namespaceExists(ns)) return false
-    if (listTables(ns).nonEmpty || listNamespaces(ns).nonEmpty)
-      throw new IllegalStateException(s"namespace not empty: ${ns.mkString(".")}")
-    fs.delete(nsPath(ns), true)
-    true
-  }
-
-  // ---- tables -----------------------------------------------------------
-
-  def tableExists(ns: Seq[String], t: String): Boolean =
-    fs.exists(metaDir(ns, t)) && currentVersion(ns, t) > 0
-
-  def listTables(ns: Seq[String]): Seq[String] = {
-    if (!namespaceExists(ns)) throw noSuchNamespace(ns)
-    fs.listStatus(nsPath(ns)).toSeq
-      .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, "metadata")))
-      .map(_.getPath.getName).sorted
-  }
-
-  private val VersionRe = "v(\\d+)\\.metadata\\.json".r
-
-  def currentVersion(ns: Seq[String], t: String): Int = {
-    val dir = metaDir(ns, t)
-    if (!fs.exists(dir)) return 0
-    fs.listStatus(dir).iterator
-      .map(_.getPath.getName)
-      .collect { case VersionRe(v) => v.toInt }
-      .maxOption.getOrElse(0)
-  }
-
-  def metadataLocation(ns: Seq[String], t: String, version: Int): String =
-    new Path(metaDir(ns, t), s"v$version.metadata.json").toString
-
-  def load(ns: Seq[String], t: String): (TableMetadata, Int) = {
-    val v = currentVersion(ns, t)
-    if (v == 0) throw noSuchTable(ns, t)
-    (loadVersion(ns, t, v), v)
-  }
-
-  def loadVersion(ns: Seq[String], t: String, v: Int): TableMetadata = {
-    val p = new Path(metaDir(ns, t), s"v$v.metadata.json")
-    if (!fs.isFile(p)) throw noSuchTable(ns, t)
-    val slim = TableMetadata.fromJson(readString(p))
-    SnapshotBodies.inflate(metaDir(ns, t).toString, slim,
-      name => readString(new Path(metaDir(ns, t), name)))
-  }
-
-  private def bodyExists(ns: Seq[String], t: String)(name: String): Boolean =
-    fs.isFile(new Path(metaDir(ns, t), name))
-  private def bodyWrite(ns: Seq[String], t: String)(name: String,
-                                                    json: String): Unit =
-    try writeNew(new Path(metaDir(ns, t), name), json)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-
-  /** Externalize snapshot payloads (see [[SnapshotBodies]]): bodies
-    * land — and reused references re-verify — before the version CAS,
-    * content-addressed + write-if-absent. */
-  private def writeBodies(ns: Seq[String], t: String,
-                          m: TableMetadata): TableMetadata =
-    SnapshotBodies.persist(metaDir(ns, t).toString, m,
-      bodyExists(ns, t), bodyWrite(ns, t))
-
-  def createTable(ns: Seq[String], t: String, m: TableMetadata): Unit = {
-    if (!namespaceExists(ns)) throw noSuchNamespace(ns)
-    if (tableExists(ns, t))
-      throw new IllegalStateException(s"table exists: ${(ns :+ t).mkString(".")}")
-    fs.mkdirs(metaDir(ns, t))
-    fs.mkdirs(new Path(tablePath(ns, t), "data"))
-    writeNew(new Path(metaDir(ns, t), "v1.metadata.json"),
-      TableMetadata.toJson(writeBodies(ns, t, m)))
-  }
-
-  def commit(ns: Seq[String], t: String, expectedVersion: Int,
-             next: TableMetadata): Boolean = {
-    val target = new Path(metaDir(ns, t), s"v${expectedVersion + 1}.metadata.json")
-    val slim = writeBodies(ns, t, next)
-    try {
-      writeNew(target, TableMetadata.toJson(slim))
-      // heal bodies an expiry pruned while this committer stalled past
-      // the grace window — the CAS won, so the content must be present
-      SnapshotBodies.ensure(metaDir(ns, t).toString, slim,
-        bodyExists(ns, t), bodyWrite(ns, t))
-      true
-    }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-  }
-
-  def dropTable(ns: Seq[String], t: String): Boolean = {
-    val dir = tablePath(ns, t)
-    if (!tableExists(ns, t)) return false
-    // metadata-only drop, like the reference (purge → 501, tables.go:288-295)
-    SnapshotBodies.invalidateScope(metaDir(ns, t).toString)
-    fs.delete(new Path(dir, "metadata"), true)
-    val data = new Path(dir, "data")
-    if (fs.exists(data) && fs.listStatus(data).isEmpty) fs.delete(data, false)
-    if (fs.listStatus(dir).isEmpty) fs.delete(dir, false)
-    true
-  }
-
-  def renameTable(fromNs: Seq[String], from: String,
-                  toNs: Seq[String], to: String): Unit = {
-    if (!tableExists(fromNs, from)) throw noSuchTable(fromNs, from)
-    if (!namespaceExists(toNs)) throw noSuchNamespace(toNs)
-    if (tableExists(toNs, to))
-      throw new IllegalStateException(s"table exists: ${(toNs :+ to).mkString(".")}")
-    SnapshotBodies.invalidateScope(metaDir(fromNs, from).toString)
-    if (!fs.rename(tablePath(fromNs, from), tablePath(toNs, to)))
-      throw new java.io.IOException(
-        s"rename failed: ${(fromNs :+ from).mkString(".")} -> ${(toNs :+ to).mkString(".")}")
-  }
-
-  def dataDir(ns: Seq[String], t: String): String =
-    new Path(tablePath(ns, t), "data").toString
-
-  // ---- physical files ---------------------------------------------------
-
-  def ensureRoot(): Unit = fs.mkdirs(root)
-
-  def listParquetUnder(absDir: String): List[String] = {
-    val dir = new Path(absDir)
-    if (!fs.exists(dir)) return Nil
-    val base = dir.toUri.getPath.stripSuffix("/")
+    val prefix = base.toUri.getPath.stripSuffix("/")
     val out = List.newBuilder[String]
     // plain listStatus recursion (not listFiles): it needs no block
     // locations or permissions, which keeps it portable across FS impls
@@ -230,42 +80,22 @@ final class HadoopMetadataStore(val warehouse: String) extends MetaStore {
       if (st.isDirectory) walk(st.getPath)
       else {
         val p = st.getPath.toUri.getPath
-        if (p.endsWith(".parquet")) out += p.stripPrefix(base).stripPrefix("/")
+        if (p.endsWith(".parquet")) out += p.stripPrefix(prefix).stripPrefix("/")
       }
     }
-    walk(dir)
+    walk(base)
     out.result()
   }
 
-  def deleteTree(absDir: String): Unit = fs.delete(new Path(absDir), true)
-
-  def deleteFileIfExists(abs: String): Boolean = fs.delete(new Path(abs), false)
-
-  def lastModifiedMs(abs: String): Option[Long] =
-    try Some(fs.getFileStatus(new Path(abs)).getModificationTime)
-    catch { case _: java.io.FileNotFoundException => None }
-
-  override def pruneSnapshotBodies(ns: Seq[String], t: String,
-                                   live: Set[String], graceMs: Long): Int = {
-    val dir = metaDir(ns, t)
-    if (!fs.exists(dir)) return 0
-    var n = 0
-    fs.listStatus(dir).foreach { st =>
-      val name = st.getPath.getName
-      if (name.endsWith(".body.json") && !live.contains(name) &&
-          st.getModificationTime <= System.currentTimeMillis() - graceMs &&
-          fs.delete(st.getPath, false)) n += 1
-    }
-    n
+  /** Single-pass byte copy (works across schemes); parents are created,
+    * and an existing destination fails loudly (import dirs are
+    * uuid-scoped — a collision is a logic error, never something to
+    * paper over). */
+  def importFile(src: String, dst: String): Unit = {
+    val (s, d) = (new Path(src), new Path(dst))
+    fs.mkdirs(d.getParent)
+    if (!FileUtil.copy(s.getFileSystem(conf), s, fs, d,
+        false /* deleteSource */, false /* overwrite */, conf))
+      throw new java.io.IOException(s"import copy $src -> $dst failed")
   }
-
-  def fileSizeBytes(abs: String): Option[Long] =
-    try Some(fs.getFileStatus(new Path(abs)).getLen)
-    catch { case _: java.io.FileNotFoundException => None }
-
-  private def noSuchNamespace(ns: Seq[String]) =
-    new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(ns.toArray)
-  private def noSuchTable(ns: Seq[String], t: String) =
-    new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
-      org.apache.spark.sql.connector.catalog.Identifier.of(ns.toArray, t))
 }

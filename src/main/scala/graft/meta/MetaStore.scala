@@ -2,15 +2,21 @@ package graft.meta
 
 /** The metadata-backend surface the catalog, table, and REST layers
   * program against — versioned namespace/table documents plus the few
-  * physical-file operations the write/compact/expire paths need. Three
-  * implementations:
-  *   - [[MetadataStore]]: local filesystem, hard-link CAS (java.nio);
-  *   - [[HadoopMetadataStore]]: any Hadoop FileSystem whose rename
-  *     refuses an existing destination (HDFS, ABFS, a MiniCluster);
-  *   - [[ConditionalPutMetadata]]: object stores, If-None-Match PUT
-  *     (commit-path only).
-  * Mirrors the reference's pluggable backend seam
-  * (`/root/reference/main.go:13-15`: glue | rest | sql).
+  * physical-file operations the write/compact/expire paths need. The
+  * versioned protocol (layout, namespaces, version CAS, snapshot bodies,
+  * drop and rename) is written once, in [[BlobMetaStore]], over one
+  * storage primitive, [[CasBlobStore]]'s create-if-absent, with three
+  * adapters:
+  *   - [[PosixBlobStore]]: local filesystem, temp write + hard link
+  *     (java.nio) — [[MetadataStore]];
+  *   - [[HadoopBlobStore]]: any Hadoop FileSystem whose rename refuses
+  *     an existing destination (HDFS, ABFS, a MiniCluster) —
+  *     [[HadoopMetadataStore]];
+  *   - [[InMemoryBlobStore]]: object-store semantics, conditional PUT
+  *     (commit-path surface: [[ConditionalPutMetadata]]).
+  * [[RestMetadataStore]] instead delegates every call to another graft
+  * REST catalog (federation). Mirrors the reference's pluggable backend
+  * seam (`reference/main.go:13-15`: glue | rest | sql).
   */
 trait MetaStore extends graft.commit.CommitTarget {
   def warehouse: String
@@ -61,23 +67,15 @@ trait MetaStore extends graft.commit.CommitTarget {
   def fileSizeBytes(abs: String): Option[Long]
 
   /** Make the bytes at `srcAbs` available at `destAbs` without
-    * rewriting them — the onboarding primitive behind `add_files`.
-    * Default: single-pass byte copy through the Hadoop FileSystem API
-    * (works across schemes); the POSIX store overrides with a hard
-    * link (true zero-copy on one device). Parents are created; an
-    * existing destination fails loudly (import dirs are uuid-scoped —
-    * a collision is a logic error, never something to paper over). */
-  def importFile(srcAbs: String, destAbs: String): Unit = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val src = new org.apache.hadoop.fs.Path(srcAbs)
-    val dst = new org.apache.hadoop.fs.Path(destAbs)
-    val sfs = src.getFileSystem(conf)
-    val dfs = dst.getFileSystem(conf)
-    dfs.mkdirs(dst.getParent)
-    if (!org.apache.hadoop.fs.FileUtil.copy(sfs, src, dfs, dst,
-        false /* deleteSource */, false /* overwrite */, conf))
-      throw new java.io.IOException(s"import copy $srcAbs -> $destAbs failed")
-  }
+    * rewriting them — the onboarding primitive behind `add_files`. The
+    * POSIX store hard-links (true zero-copy on one device); the Hadoop
+    * store copies in one pass (works across schemes). Parents are
+    * created; an existing destination fails loudly (import dirs are
+    * uuid-scoped — a collision is a logic error, never something to
+    * paper over). Default: the store the destination's location
+    * selects (see [[MetaStore.forWarehouse]]). */
+  def importFile(srcAbs: String, destAbs: String): Unit =
+    MetaStore.forWarehouse(destAbs).importFile(srcAbs, destAbs)
 
   /** GC externalized snapshot bodies (see [[SnapshotBodies]]) whose
     * name is not in `live`, skipping bodies younger than `graceMs` (a
@@ -89,19 +87,19 @@ trait MetaStore extends graft.commit.CommitTarget {
 }
 
 object MetaStore {
+  /** Object stores whose Hadoop connector implements rename as a
+    * non-atomic copy+delete: the Hadoop adapter's rename-CAS would let
+    * two racing committers both "win" a version there — silent lost
+    * commits. Fail fast and point at the conditional-PUT protocol. */
+  private val CopyDeleteRenameSchemes =
+    Set("s3", "s3a", "s3n", "gs", "oss", "cos", "swift")
+
   /** Pick the store implementation for a warehouse location: bare paths
     * and `file:` URIs use the POSIX hard-link store; `http(s)` points at
     * another graft REST catalog (federation — the reference's `rest`
     * backend, `main.go:14`); any other scheme goes through the Hadoop
     * FileSystem API (the seam a real cluster points at `hdfs://` /
     * `abfs://`). */
-  /** Object stores whose Hadoop connector implements rename as a
-    * non-atomic copy+delete: HadoopMetadataStore's rename-CAS would let
-    * two racing committers both "win" a version there — silent lost
-    * commits. Fail fast and point at the conditional-PUT protocol. */
-  private val CopyDeleteRenameSchemes =
-    Set("s3", "s3a", "s3n", "gs", "oss", "cos", "swift")
-
   def forWarehouse(wh: String): MetaStore = {
     val scheme = try Option(new java.net.URI(wh).getScheme)
     catch { case _: java.net.URISyntaxException => None }

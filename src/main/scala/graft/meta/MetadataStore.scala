@@ -1,300 +1,96 @@
 package graft.meta
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, NotDirectoryException, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
-import org.json4s._
-import org.json4s.jackson.Serialization
 
-/** Filesystem-backed versioned metadata store with compare-and-swap
-  * commits — the role SQLite + iceberg-go's FileIO play for the reference
-  * (`/root/reference/configs/.iceberg-go.yaml:2-10`; commit protocol at
-  * `/root/reference/api/handlers/tables.go:192`).
-  *
-  * Layout under the warehouse root:
-  * {{{
-  *   <wh>/<ns...>/.namespace.json              namespace marker + props
-  *   <wh>/<ns...>/<table>/metadata/v<N>.metadata.json
-  *   <wh>/<ns...>/<table>/data/...             parquet files
-  * }}}
-  *
-  * Concurrency: version files are immutable and created with
-  * CREATE_NEW — two drivers racing to commit version N+1 cannot both win,
-  * because exactly one O_EXCL create succeeds. That single atomic
-  * primitive is the whole CAS; readers list versions and take the max.
-  * The same protocol maps to conditional-PUT (If-None-Match) on object
-  * stores, so it holds on a 1000-driver cluster, not just local fs.
-  */
-final class MetadataStore(val warehouse: String) extends MetaStore {
+/** The [[MetaStore]] protocol on a local file system: [[BlobMetaStore]]
+  * over [[PosixBlobStore]]. */
+final class MetadataStore(warehouse: String)
+  extends BlobMetaStore(new PosixBlobStore(warehouse))
 
-  private val NsMarker = ".namespace.json"
-  private implicit val formats: Formats = Serialization.formats(NoTypeHints)
+/** [[CasBlobStore]] over java.nio. Create-if-absent is a temp write plus
+  * a hard link into place: link(2) fails with EEXIST atomically, and the
+  * target is never observable partially written (a bare CREATE_NEW would
+  * expose an empty file to concurrent readers between create and write).
+  * Keys are plain file-system paths, so every location the protocol hands
+  * out (`metadataLocation`, `dataDir`) is one too. */
+final class PosixBlobStore(val root: String) extends CasBlobStore {
 
-  private def nsPath(ns: Seq[String]): Path = Paths.get(warehouse, ns: _*)
-  private def tablePath(ns: Seq[String], t: String): Path =
-    Paths.get(warehouse, (ns :+ t): _*)
-  private def metaDir(ns: Seq[String], t: String): Path =
-    tablePath(ns, t).resolve("metadata")
+  override def resolve(dir: String, name: String): String = Paths.get(dir, name).toString
 
-  // ---- namespaces -------------------------------------------------------
+  private def temp(p: Path): Path =
+    p.resolveSibling("." + p.getFileName + ".tmp." + java.util.UUID.randomUUID())
 
-  def namespaceExists(ns: Seq[String]): Boolean =
-    ns.nonEmpty && Files.isRegularFile(nsPath(ns).resolve(NsMarker))
-
-  def createNamespace(ns: Seq[String], props: Map[String, String]): Unit = {
-    require(ns.nonEmpty && ns.forall(_.nonEmpty), s"invalid namespace ${ns.mkString(".")}")
-    if (namespaceExists(ns))
-      throw new IllegalStateException(s"namespace exists: ${ns.mkString(".")}")
-    Files.createDirectories(nsPath(ns))
-    writeAtomic(nsPath(ns).resolve(NsMarker), Serialization.write(props))
+  def putIfAbsent(key: String, content: Array[Byte]): Boolean = {
+    val p = Paths.get(key)
+    val tmp = temp(p)
+    Files.write(tmp, content, StandardOpenOption.CREATE_NEW)
+    try { Files.createLink(p, tmp); true }
+    catch { case _: FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
   }
 
-  def loadNamespace(ns: Seq[String]): Map[String, String] = {
-    if (!namespaceExists(ns)) throw noSuchNamespace(ns)
-    Serialization.read[Map[String, String]](
-      new String(Files.readAllBytes(nsPath(ns).resolve(NsMarker)), UTF_8))
+  def put(key: String, content: Array[Byte]): Unit = {
+    val p = Paths.get(key)
+    val tmp = temp(p)
+    Files.write(tmp, content)
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def setNamespaceProperties(ns: Seq[String], props: Map[String, String]): Unit = {
-    if (!namespaceExists(ns)) throw noSuchNamespace(ns)
-    writeAtomic(nsPath(ns).resolve(NsMarker), Serialization.write(props))
-  }
+  def get(key: String): Option[Array[Byte]] =
+    try Some(Files.readAllBytes(Paths.get(key)))
+    catch { case _: NoSuchFileException => None }
 
-  def listNamespaces(parent: Seq[String]): Seq[Seq[String]] = {
-    val base = if (parent.isEmpty) Paths.get(warehouse) else nsPath(parent)
-    if (parent.nonEmpty && !namespaceExists(parent)) throw noSuchNamespace(parent)
-    if (!Files.isDirectory(base)) return Nil
-    MetadataStore.listDir(base)
-      .filter(p => Files.isDirectory(p) && Files.isRegularFile(p.resolve(NsMarker)))
-      .map(p => parent :+ p.getFileName.toString).sortBy(_.mkString(""))
-  }
+  def contains(key: String): Boolean = Files.exists(Paths.get(key))
 
-  /** Non-cascading drop; refuses when tables or child namespaces remain
-    * (reference: NamespaceNotEmptyException 409, `namespaces.go:131-136`).
-    * Once the emptiness check passes, anything left under the directory
-    * is residue from metadata-only table drops (data files with no
-    * metadata dir) — removed recursively, so DROP NAMESPACE succeeds
-    * instead of leaking a raw DirectoryNotEmptyException. */
-  def dropNamespace(ns: Seq[String]): Boolean = {
-    if (!namespaceExists(ns)) return false
-    if (listTables(ns).nonEmpty || listNamespaces(ns).nonEmpty)
-      throw new IllegalStateException(s"namespace not empty: ${ns.mkString(".")}")
-    deleteRecursive(nsPath(ns))
-    true
-  }
+  def list(dir: String): Seq[String] =
+    try MetadataStore.listDir(Paths.get(dir)).map(_.getFileName.toString)
+    catch { case _: NoSuchFileException | _: NotDirectoryException => Nil }
 
-  // ---- tables -----------------------------------------------------------
+  def delete(key: String): Boolean = Files.deleteIfExists(Paths.get(key))
+  def deleteTree(dir: String): Unit = MetadataStore.deleteRecursive(Paths.get(dir))
+  def move(from: String, to: String): Unit = Files.move(Paths.get(from), Paths.get(to))
+  override def mkdirs(dir: String): Unit = Files.createDirectories(Paths.get(dir))
 
-  def tableExists(ns: Seq[String], t: String): Boolean =
-    Files.isDirectory(metaDir(ns, t)) && currentVersion(ns, t) > 0
+  private def attrs(key: String) =
+    try Some(Files.readAttributes(Paths.get(key), classOf[BasicFileAttributes]))
+    catch { case _: java.io.IOException => None }
+  def modifiedMs(key: String): Option[Long] = attrs(key).map(_.lastModifiedTime.toMillis)
+  def size(key: String): Option[Long] = attrs(key).map(_.size)
 
-  def listTables(ns: Seq[String]): Seq[String] = {
-    if (!namespaceExists(ns)) throw noSuchNamespace(ns)
-    MetadataStore.listDir(nsPath(ns))
-      .filter(p => Files.isDirectory(p.resolve("metadata")))
-      .map(_.getFileName.toString).sorted
-  }
-
-  def currentVersion(ns: Seq[String], t: String): Int = {
-    val dir = metaDir(ns, t)
-    if (!Files.isDirectory(dir)) return 0
-    MetadataStore.listDir(dir)
-      .map(_.getFileName.toString)
-      .collect { case VersionRe(v) => v.toInt }
-      .maxOption.getOrElse(0)
-  }
-
-  private val VersionRe = "v(\\d+)\\.metadata\\.json".r
-
-  override def pruneSnapshotBodies(ns: Seq[String], t: String,
-                                   live: Set[String], graceMs: Long): Int = {
-    val dir = metaDir(ns, t)
-    if (!Files.isDirectory(dir)) return 0
-    var n = 0
-    val stream = Files.list(dir)
-    try stream.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".body.json"))
-      .foreach { p =>
-        val young = // unreadable mtime counts as young: never guess
-          try Files.getLastModifiedTime(p).toMillis >
-            System.currentTimeMillis() - graceMs
-          catch { case _: Exception => true }
-        if (!live.contains(p.getFileName.toString) && !young &&
-            Files.deleteIfExists(p)) n += 1
-      }
-    finally stream.close()
-    n
-  }
-
-  def metadataLocation(ns: Seq[String], t: String, version: Int): String =
-    metaDir(ns, t).resolve(s"v$version.metadata.json").toString
-
-  def load(ns: Seq[String], t: String): (TableMetadata, Int) = {
-    val v = currentVersion(ns, t)
-    if (v == 0) throw noSuchTable(ns, t)
-    (loadVersion(ns, t, v), v)
-  }
-
-  def loadVersion(ns: Seq[String], t: String, v: Int): TableMetadata = {
-    val p = metaDir(ns, t).resolve(s"v$v.metadata.json")
-    if (!Files.isRegularFile(p)) throw noSuchTable(ns, t)
-    val slim = TableMetadata.fromJson(new String(Files.readAllBytes(p), UTF_8))
-    SnapshotBodies.inflate(metaDir(ns, t).toString, slim, name =>
-      new String(Files.readAllBytes(metaDir(ns, t).resolve(name)), UTF_8))
-  }
-
-  /** Create v1 — CREATE_NEW on the v1 file doubles as the
-    * already-exists guard under races. */
-  def createTable(ns: Seq[String], t: String, m: TableMetadata): Unit = {
-    if (!namespaceExists(ns)) throw noSuchNamespace(ns)
-    if (tableExists(ns, t))
-      throw new IllegalStateException(s"table exists: ${(ns :+ t).mkString(".")}")
-    Files.createDirectories(metaDir(ns, t))
-    Files.createDirectories(tablePath(ns, t).resolve("data"))
-    writeNew(metaDir(ns, t).resolve("v1.metadata.json"),
-      TableMetadata.toJson(writeBodies(ns, t, m)))
-  }
-
-  private def bodyExists(ns: Seq[String], t: String)(name: String): Boolean =
-    Files.isRegularFile(metaDir(ns, t).resolve(name))
-  private def bodyWrite(ns: Seq[String], t: String)(name: String,
-                                                    json: String): Unit =
-    try writeNew(metaDir(ns, t).resolve(name), json)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-
-  /** Externalize snapshot payloads (see [[SnapshotBodies]]): body
-    * documents land — and reused references re-verify — before the
-    * version CAS; already-present names hold identical bytes
-    * (content-addressed), so losing a body-write race is a no-op. */
-  private def writeBodies(ns: Seq[String], t: String,
-                          m: TableMetadata): TableMetadata =
-    SnapshotBodies.persist(metaDir(ns, t).toString, m,
-      bodyExists(ns, t), bodyWrite(ns, t))
-
-  /** CAS commit: persist `next` as version `expectedVersion + 1`. Fails
-    * (returns false) if another committer won that version. */
-  def commit(ns: Seq[String], t: String, expectedVersion: Int,
-             next: TableMetadata): Boolean = {
-    val target = metaDir(ns, t).resolve(s"v${expectedVersion + 1}.metadata.json")
-    val slim = writeBodies(ns, t, next)
-    try {
-      writeNew(target, TableMetadata.toJson(slim))
-      // heal bodies an expiry pruned while this committer stalled past
-      // the grace window — the CAS won, so the content must be present
-      SnapshotBodies.ensure(metaDir(ns, t).toString, slim,
-        bodyExists(ns, t), bodyWrite(ns, t))
-      true
-    }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-  }
-
-  def dropTable(ns: Seq[String], t: String): Boolean = {
-    val dir = tablePath(ns, t)
-    if (!tableExists(ns, t)) return false
-    // metadata-only drop, like the reference (purge → 501, tables.go:288-295)
-    SnapshotBodies.invalidateScope(metaDir(ns, t).toString)
-    deleteRecursive(dir.resolve("metadata"))
-    if (Files.isDirectory(dir.resolve("data")) &&
-        MetadataStore.listDir(dir.resolve("data")).isEmpty)
-      Files.delete(dir.resolve("data"))
-    if (MetadataStore.listDir(dir).isEmpty) Files.delete(dir)
-    true
-  }
-
-  def renameTable(fromNs: Seq[String], from: String,
-                  toNs: Seq[String], to: String): Unit = {
-    if (!tableExists(fromNs, from)) throw noSuchTable(fromNs, from)
-    if (!namespaceExists(toNs)) throw noSuchNamespace(toNs)
-    if (tableExists(toNs, to))
-      throw new IllegalStateException(s"table exists: ${(toNs :+ to).mkString(".")}")
-    SnapshotBodies.invalidateScope(metaDir(fromNs, from).toString)
-    Files.move(tablePath(fromNs, from), tablePath(toNs, to))
-  }
-
-  def dataDir(ns: Seq[String], t: String): String =
-    tablePath(ns, t).resolve("data").toString
-
-  // ---- physical files ---------------------------------------------------
-
-  def ensureRoot(): Unit = { Files.createDirectories(Paths.get(warehouse)); () }
-
-  def listParquetUnder(absDir: String): List[String] = {
-    val dir = Paths.get(absDir)
-    if (!Files.isDirectory(dir)) return Nil
-    val walk = Files.walk(dir)
+  def listParquet(dir: String): List[String] = {
+    val d = Paths.get(dir)
+    if (!Files.isDirectory(d)) return Nil
+    val walk = Files.walk(d)
     try walk.iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet"))
-      .map(p => dir.relativize(p).toString).toList
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+      .map(p => d.relativize(p).toString).toList
     finally walk.close()
   }
-
-  def deleteTree(absDir: String): Unit = deleteRecursive(Paths.get(absDir))
-
-  def deleteFileIfExists(abs: String): Boolean = Files.deleteIfExists(Paths.get(abs))
-
-  def lastModifiedMs(abs: String): Option[Long] =
-    try Some(Files.getLastModifiedTime(Paths.get(abs)).toMillis)
-    catch { case _: java.io.IOException => None }
-
-  def fileSizeBytes(abs: String): Option[Long] =
-    try Some(Files.size(Paths.get(abs)))
-    catch { case _: java.io.IOException => None }
 
   /** Zero-copy import on one device: hard-link the source into the
     * data dir (committed files are immutable on both sides, so sharing
     * the inode is safe); cross-device (EXDEV) or no-link filesystems
     * fall back to a byte copy. */
-  override def importFile(srcAbs: String, destAbs: String): Unit = {
-    val src = Paths.get(srcAbs)
-    val dst = Paths.get(destAbs)
-    Files.createDirectories(dst.getParent)
-    try Files.createLink(dst, src)
+  def importFile(src: String, dst: String): Unit = {
+    val (s, d) = (Paths.get(src), Paths.get(dst))
+    Files.createDirectories(d.getParent)
+    try Files.createLink(d, s)
     catch {
       case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        Files.copy(src, dst)
+        Files.copy(s, d)
     }
   }
-
-  // ---- helpers ----------------------------------------------------------
-
-  private def writeAtomic(p: Path, content: String): Unit = {
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp." +
-      java.util.UUID.randomUUID().toString)
-    Files.write(tmp, content.getBytes(UTF_8))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Atomic create-if-absent with full content: write a temp file, then
-    * hard-link it into place — link(2) fails with EEXIST atomically, and
-    * the target is never observable in a partially-written state (a bare
-    * CREATE_NEW would expose an empty file to concurrent readers between
-    * create and write). */
-  private def writeNew(p: Path, content: String): Unit = {
-    val tmp = p.resolveSibling("." + p.getFileName.toString + ".tmp." +
-      java.util.UUID.randomUUID().toString)
-    Files.write(tmp, content.getBytes(UTF_8), StandardOpenOption.CREATE_NEW)
-    try Files.createLink(p, tmp)
-    finally Files.deleteIfExists(tmp)
-  }
-
-  private[meta] def deleteRecursive(p: Path): Unit = MetadataStore.deleteRecursive(p)
-
-  private def noSuchNamespace(ns: Seq[String]) =
-    new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(ns.toArray)
-  private def noSuchTable(ns: Seq[String], t: String) =
-    new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
-      org.apache.spark.sql.connector.catalog.Identifier.of(ns.toArray, t))
 }
 
 object MetadataStore {
   /** List a directory with the stream CLOSED before returning. Every
-    * listing in this store must go through here — a bare
-    * `Files.list(p).iterator()` holds the directory descriptor open
-    * forever, and since [[MetadataStore.currentVersion]] runs on every
-    * table load, a long-lived server (or one test JVM running the
-    * whole suite) marches straight into the process FD limit. */
+    * listing goes through here — a bare `Files.list(p).iterator()` holds
+    * the directory descriptor open forever, and since `currentVersion`
+    * runs on every table load, a long-lived server (or one test JVM
+    * running the whole suite) marches straight into the process FD
+    * limit. */
   private[meta] def listDir(p: Path): List[Path] = {
     val s = Files.list(p)
     try s.iterator().asScala.toList finally s.close()

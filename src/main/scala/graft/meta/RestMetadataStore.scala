@@ -355,6 +355,8 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
   def lastModifiedMs(abs: String): Option[Long] = phys(abs).lastModifiedMs(abs)
 
   def fileSizeBytes(abs: String): Option[Long] = phys(abs).fileSizeBytes(abs)
+  override def importFile(srcAbs: String, destAbs: String): Unit =
+    phys(destAbs).importFile(srcAbs, destAbs)
 
   private def noSuchNamespace(ns: Seq[String]) =
     new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(ns.toArray)

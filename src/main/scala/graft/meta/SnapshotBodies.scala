@@ -1,5 +1,6 @@
 package graft.meta
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.json4s._
 import org.json4s.jackson.Serialization
 
@@ -82,42 +83,34 @@ object SnapshotBodies {
 
   private def hashHex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .digest(s.getBytes(UTF_8))
       .take(8).map("%02x".format(_)).mkString
 
-  /** Persist `m`'s snapshot payloads through the store primitives and
+  /** Persist `m`'s snapshot payloads into directory `dir` of `blobs` and
     * return the slim document to CAS: fresh bodies are written
     * (create-if-absent — an already-present name holds identical
     * bytes), and REUSED references are existence-verified, re-writing
-    * from cache when the store lost them. `exists`/`write` take the
-    * body's relative name; `scope` keys the cache per store+table. */
-  def persist(scope: String, m: TableMetadata,
-              exists: String => Boolean,
-              write: (String, String) => Unit): TableMetadata = {
-    val out = Seq.newBuilder[(String, String)]
+    * from cache when the store lost them. `dir` also scopes the cache
+    * per store+table. */
+  def persist(blobs: CasBlobStore, dir: String, m: TableMetadata): TableMetadata = {
     val reused = Seq.newBuilder[String]
     val slim = m.snapshots.map { s =>
       val reusable = s.bodyRef.exists(n =>
-        Option(cache.get(s"$scope/$n")).exists(same(_, s)))
+        Option(cache.get(s"$dir/$n")).exists(same(_, s)))
       val name = s.bodyRef.filter(_ => reusable) match {
         case Some(n) => reused += n; n
         case None =>
           val body = Body(s.files, s.fileStats, s.deleteFiles, s.fileSeqs)
           val json = MetaJson.body(body)
           val n = s"snap-${s.snapshotId}-${hashHex(json)}.body.json"
-          out += ((n, json))
-          cachePut(s"$scope/$n", body)
+          blobs.putIfAbsent(blobs.resolve(dir, n), json.getBytes(UTF_8))
+          cachePut(s"$dir/$n", body)
           n
       }
       s.copy(files = Nil, fileStats = Map.empty, deleteFiles = Nil,
         fileSeqs = Map.empty, bodyRef = Some(name))
     }
-    out.result().foreach { case (n, j) => write(n, j) }
-    reused.result().distinct.foreach { n =>
-      if (!exists(n))
-        Option(cache.get(s"$scope/$n")).foreach(b =>
-          write(n, MetaJson.body(b)))
-    }
+    heal(blobs, dir, reused.result())
     m.copy(snapshots = slim, formatVersion = FormatVersion)
   }
 
@@ -127,13 +120,14 @@ object SnapshotBodies {
     * and gets pruned; once the CAS wins, the content must come back).
     * Bodies absent from the cache cannot be healed — the next prune's
     * grace window is the backstop against that being common. */
-  def ensure(scope: String, slim: TableMetadata,
-             exists: String => Boolean,
-             write: (String, String) => Unit): Unit =
-    slim.snapshots.flatMap(_.bodyRef).distinct.foreach { n =>
-      if (!exists(n))
-        Option(cache.get(s"$scope/$n")).foreach(b =>
-          write(n, MetaJson.body(b)))
+  def ensure(blobs: CasBlobStore, dir: String, slim: TableMetadata): Unit =
+    heal(blobs, dir, slim.snapshots.flatMap(_.bodyRef))
+
+  private def heal(blobs: CasBlobStore, dir: String, names: Seq[String]): Unit =
+    names.distinct.foreach { n =>
+      val key = blobs.resolve(dir, n)
+      if (!blobs.contains(key)) Option(cache.get(s"$dir/$n")).foreach(b =>
+        blobs.putIfAbsent(key, MetaJson.body(b).getBytes(UTF_8)))
     }
 
   /** Re-inflate a loaded slim document: resolve each `bodyRef` through

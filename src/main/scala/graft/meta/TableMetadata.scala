@@ -12,7 +12,7 @@ import org.json4s.jackson.Serialization
   * One immutable JSON document per version; all table state — versioned
   * schemas with stable field ids, partition spec (hidden-partition
   * transforms), sort order, properties, snapshots — lives here. Commits
-  * never mutate: they write version N+1 (see [[MetadataStore]]).
+  * never mutate: they create version N+1 (see [[BlobMetaStore]]).
   */
 final case class FieldDef(id: Int, name: String, `type`: String, required: Boolean)
 

@@ -276,7 +276,12 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
       spec = PartitionSpecDef(0, specFields),
       order = SortOrderDef(0, Nil),
       props = catalog.configDefaults ++ props)
-    catalog.metadataStore.createTable(n.toSeq, name, meta)
+    // a create that lost a race to another one is a 409 like the check above
+    try catalog.metadataStore.createTable(n.toSeq, name, meta)
+    catch { case _: IllegalStateException =>
+      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
+        Identifier.of(n, name))
+    }
     respondLoadTable(ex, n.toSeq, name)
   }
 

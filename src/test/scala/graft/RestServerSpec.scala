@@ -230,6 +230,46 @@ class RestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((0 until threads).forall(t => props.contains(s"k$t")))
   }
 
+  test("racing creates over the wire: one 200 per name, the rest 409, implicit parents shared") {
+    // all n requests leave together; several rounds, so a check-then-write
+    // window in the create path shows up in at least one of them
+    def race(n: Int)(send: Int => HttpResponse[String]): Seq[HttpResponse[String]] = {
+      val gate = new java.util.concurrent.CyclicBarrier(n)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+      try (0 until n).map(i => pool.submit(new java.util.concurrent.Callable[HttpResponse[String]] {
+        def call(): HttpResponse[String] = { gate.await(); send(i) }
+      })).map(_.get())
+      finally pool.shutdown()
+    }
+    def winner(rs: Seq[HttpResponse[String]]): Int = {
+      val codes = rs.map(_.statusCode())
+      assert(codes.count(_ == 200) == 1 && codes.count(_ == 409) == rs.size - 1,
+        s"codes $codes: ${rs.filter(_.statusCode() >= 500).map(_.body).mkString}")
+      assert(rs.filter(_.statusCode() == 409).forall(r =>
+        (parse(r) \ "error" \ "type").extract[String] == "AlreadyExistsException"))
+      codes.indexOf(200)
+    }
+    (0 until 10).foreach { round =>
+      val ns = s"race_$round"
+      val w = winner(race(8)(i => req("POST", "/v1/namespaces",
+        s"""{"namespace":["$ns"],"properties":{"who":"$i"}}""")))
+      assert((parse(req("GET", s"/v1/namespaces/$ns")) \ "properties")
+        .extract[Map[String, String]] == Map("who" -> w.toString))
+
+      val t = winner(race(8)(i => req("POST", s"/v1/namespaces/$ns/tables",
+        s"""{"name":"t","schema":$tableSchema,"properties":{"who":"$i"}}""")))
+      assert((parse(req("GET", s"/v1/namespaces/$ns/tables/t")) \ "metadata" \
+        "properties" \ "who").extract[String] == t.toString)
+
+      // distinct leaves under one implicit parent: every create succeeds
+      val kids = race(8)(i => req("POST", "/v1/namespaces",
+        s"""{"namespace":["${ns}_p","c$i"]}"""))
+      assert(kids.forall(_.statusCode() == 200), kids.map(_.body).mkString)
+      assert((parse(req("GET", s"/v1/namespaces?parent=${ns}_p")) \ "namespaces")
+        .extract[List[List[String]]].size == 8)
+    }
+  }
+
   test("error taxonomy over the wire (server_test.go:262-315)") {
     assert(req("GET", "/v1/namespaces/non_existent").statusCode() == 404)
     val r = req("GET", "/v1/namespaces/non_existent")
