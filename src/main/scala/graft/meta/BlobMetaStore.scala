@@ -77,6 +77,19 @@ trait CasBlobStore {
   * namespace) cannot both win, because exactly one create-if-absent
   * succeeds. That single primitive is the whole CAS; readers list
   * versions and take the max.
+  *
+  * Version cache: a load lists `metadata/` and reads the slim version
+  * document (a few KB) every time, but parses and inflates it only when
+  * the process-wide cache holds no metadata inflated from exactly those
+  * bytes under that key. Comparing bytes, not trusting the path, means a
+  * table dropped and recreated by another process never serves stale
+  * metadata. A won commit caches the version it wrote, inflated from the
+  * bodies [[SnapshotBodies.persist]] just cached, so the load after a
+  * commit parses nothing heavy; drop and rename evict the table's
+  * entries. Repeated loads of an unchanged version return the same
+  * instance, which lets the REST server reuse the response it rendered
+  * for it. Bounds: 128 versions in access order; each pins its snapshot
+  * bodies, besides [[SnapshotBodies]]' own 512-body LRU.
   */
 class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
 
@@ -158,12 +171,22 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
     (loadVersion(ns, t, v), v)
   }
 
+  /** Reads the slim document every time; returns the cached instance
+    * only when the bytes are the ones it was inflated from. */
   def loadVersion(ns: Seq[String], t: String, v: Int): TableMetadata = {
-    val md = metaDir(ns, t)
-    val slim = TableMetadata.fromJson(
-      text(blobs.resolve(md, s"v$v.metadata.json")).getOrElse(throw noSuchTable(ns, t)))
-    SnapshotBodies.inflate(md, slim, name => text(blobs.resolve(md, name))
-      .getOrElse(throw new java.io.FileNotFoundException(blobs.resolve(md, name))))
+    val key = metadataLocation(ns, t, v)
+    val bytes = blobs.get(key).getOrElse(throw noSuchTable(ns, t))
+    BlobMetaStore.cached(key, bytes).getOrElse(inflate(metaDir(ns, t), key, bytes))
+  }
+
+  /** Parse a slim document, inflate its snapshot bodies and cache the
+    * result under its key. */
+  private def inflate(md: String, key: String, bytes: Array[Byte]): TableMetadata = {
+    val m = SnapshotBodies.inflate(md, TableMetadata.fromJson(new String(bytes, UTF_8)),
+      name => text(blobs.resolve(md, name))
+        .getOrElse(throw new java.io.FileNotFoundException(blobs.resolve(md, name))))
+    BlobMetaStore.cache(key, bytes, m)
+    m
   }
 
   /** Create v1. The pre-check catches a table whose v1 expiry already
@@ -186,11 +209,17 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
              next: TableMetadata): Boolean = {
     val md = metaDir(ns, t)
     val slim = SnapshotBodies.persist(blobs, md, next)
-    val won = blobs.putIfAbsent(blobs.resolve(md, s"v${expectedVersion + 1}.metadata.json"),
-      TableMetadata.toJson(slim).getBytes(UTF_8))
-    // heal bodies an expiry pruned while this committer stalled past the
-    // grace window — the CAS won, so the content must be present
-    if (won) SnapshotBodies.ensure(blobs, md, slim)
+    val key = metadataLocation(ns, t, expectedVersion + 1)
+    val bytes = TableMetadata.toJson(slim).getBytes(UTF_8)
+    val won = blobs.putIfAbsent(key, bytes)
+    if (won) {
+      // heal bodies an expiry pruned while this committer stalled past the
+      // grace window — the CAS won, so the content must be present
+      SnapshotBodies.ensure(blobs, md, slim)
+      // the bodies persist just cached make this inflate cheap, and the
+      // load after the commit a hit
+      inflate(md, key, bytes)
+    }
     won
   }
 
@@ -198,6 +227,7 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
     if (!tableExists(ns, t)) return false
     // metadata-only drop, like the reference (purge → 501, tables.go:288-295)
     SnapshotBodies.invalidateScope(metaDir(ns, t))
+    BlobMetaStore.evictUnder(metaDir(ns, t))
     blobs.deleteTree(metaDir(ns, t))
     Seq(dataDir(ns, t), tableDir(ns, t)).foreach { d =>
       if (blobs.list(d).isEmpty) blobs.delete(d)
@@ -211,6 +241,7 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
     if (!namespaceExists(toNs)) throw noSuchNamespace(toNs)
     if (tableExists(toNs, to)) throw tableExistsError(toNs, to)
     SnapshotBodies.invalidateScope(metaDir(fromNs, from))
+    BlobMetaStore.evictUnder(metaDir(fromNs, from))
     blobs.move(tableDir(fromNs, from), tableDir(toNs, to))
   }
 
@@ -246,4 +277,32 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
     new NoSuchTableException(Identifier.of(ns.toArray, t))
   private def tableExistsError(ns: Seq[String], t: String) =
     new IllegalStateException(s"table exists: ${(ns :+ t).mkString(".")}")
+}
+
+object BlobMetaStore {
+  private final class Version(val bytes: Array[Byte], val meta: TableMetadata)
+
+  // version-document key → its bytes and the metadata inflated from them,
+  // process-wide like the body cache (stores over one warehouse share
+  // entries), in access order. An entry pins its snapshot bodies, so the
+  // bound is small: about one current version per table in use.
+  private val Bound = 128
+  private val versions = new java.util.LinkedHashMap[String, Version](Bound, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Version]): Boolean =
+      size > Bound
+  }
+
+  /** The metadata cached for `key`, if it was inflated from exactly
+    * `bytes`: a version document rewritten in place (a table dropped and
+    * recreated by another process) never hits a stale entry. */
+  private def cached(key: String, bytes: Array[Byte]): Option[TableMetadata] =
+    versions.synchronized(Option(versions.get(key)))
+      .filter(v => java.util.Arrays.equals(v.bytes, bytes)).map(_.meta)
+
+  private def cache(key: String, bytes: Array[Byte], m: TableMetadata): Unit =
+    versions.synchronized(versions.put(key, new Version(bytes, m)))
+
+  /** Forget every version under the metadata directory `dir`. */
+  private def evictUnder(dir: String): Unit =
+    versions.synchronized(versions.keySet.removeIf(_.startsWith(s"$dir/")))
 }

@@ -49,18 +49,18 @@ object SnapshotBodies {
                         deleteFiles: List[DeleteFileDef],
                         fileSeqs: Map[String, Long])
 
-  // (store scope + body name) → parsed body. Bodies are immutable; the
-  // bound only caps memory (entry count as a proxy — histories are
-  // metadata-scale). Overflow evicts ONE arbitrary entry: a full clear
-  // would thrash every other table in the JVM back to cold loads.
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Body]()
-  private def cachePut(k: String, b: Body): Unit = {
-    if (cache.size >= 512) {
-      val it = cache.keys()
-      if (it.hasMoreElements) cache.remove(it.nextElement())
-    }
-    cache.put(k, b)
+  // (store scope + body name) → parsed body, in access order. Bodies are
+  // immutable; the bound only caps memory (entry count as a proxy —
+  // histories are metadata-scale). Overflow evicts the least recently
+  // used body, so a table that keeps being read keeps its bodies while
+  // colder tables' bodies stream through.
+  private val Bound = 512
+  private val cache = new java.util.LinkedHashMap[String, Body](Bound, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Body]): Boolean =
+      size > Bound
   }
+  private def cached(k: String): Option[Body] = cache.synchronized(Option(cache.get(k)))
+  private def cachePut(k: String, b: Body): Unit = cache.synchronized(cache.put(k, b))
 
   /** Forget every cached body under `scope` — table drop/rename
     * hygiene, so a recreated table at the same path can never hit a
@@ -68,11 +68,7 @@ object SnapshotBodies {
     * cache from serving a deleted table's payloads.) */
   def invalidateScope(scope: String): Unit = {
     val prefix = s"$scope/"
-    val it = cache.keys()
-    while (it.hasMoreElements) {
-      val k = it.nextElement()
-      if (k.startsWith(prefix)) cache.remove(k)
-    }
+    cache.synchronized(cache.keySet.removeIf(_.startsWith(prefix)))
   }
 
   private def same(b: Body, s: SnapshotDef): Boolean =
@@ -96,7 +92,7 @@ object SnapshotBodies {
     val reused = Seq.newBuilder[String]
     val slim = m.snapshots.map { s =>
       val reusable = s.bodyRef.exists(n =>
-        Option(cache.get(s"$dir/$n")).exists(same(_, s)))
+        cached(s"$dir/$n").exists(same(_, s)))
       val name = s.bodyRef.filter(_ => reusable) match {
         case Some(n) => reused += n; n
         case None =>
@@ -126,7 +122,7 @@ object SnapshotBodies {
   private def heal(blobs: CasBlobStore, dir: String, names: Seq[String]): Unit =
     names.distinct.foreach { n =>
       val key = blobs.resolve(dir, n)
-      if (!blobs.contains(key)) Option(cache.get(s"$dir/$n")).foreach(b =>
+      if (!blobs.contains(key)) cached(s"$dir/$n").foreach(b =>
         blobs.putIfAbsent(key, MetaJson.body(b).getBytes(UTF_8)))
     }
 
@@ -143,7 +139,7 @@ object SnapshotBodies {
         case None => s
         case Some(n) =>
           val k = s"$scope/$n"
-          val body = Option(cache.get(k)).getOrElse {
+          val body = cached(k).getOrElse {
             val b =
               try Serialization.read[Body](read(n))
               catch {

@@ -39,6 +39,12 @@ private[server] final class BlockBuffer extends OutputStream {
     pos = 0
   }
 
+  /** Drop the unused tail of the last block, for a buffer that is kept. */
+  def trim(): Unit = if (pos < cur.length) {
+    cur = java.util.Arrays.copyOf(cur, pos)
+    blocks(blocks.length - 1) = cur
+  }
+
   def writeTo(out: OutputStream): Unit =
     blocks.foreach(b => out.write(b, 0, if (b eq cur) pos else b.length))
 }

@@ -130,7 +130,10 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
         error(ex, 500, "InternalServerError", String.valueOf(e.getMessage))
     } finally {
       val latencyMs = (System.nanoTime() - t0) / 1e6
-      val size = Option(ex.getAttribute("graft.size")).fold(0L)(_.toString.toLong)
+      // the length sent, from this exchange's own headers: exchange
+      // attributes live on the shared HttpContext, so concurrent requests
+      // would read each other's values there
+      val size = Option(ex.getResponseHeaders.getFirst("Content-Length")).fold(0L)(_.toLong)
       val line = f"requestId=$requestId method=$method path=$path " +
         f"client=${ex.getRemoteAddress.getAddress.getHostAddress} " +
         f"status=${ex.getResponseCode} latency=$latencyMs%.2fms size=$size"
@@ -155,30 +158,68 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
   private def json(ex: HttpExchange, code: Int, v: JValue): Unit =
     respond(ex, code)(JsonMethods.mapper.writeValue(_, v))
 
-  /** Send the JSON body `write` renders. The whole body is rendered
-    * before the headers go out, so a render failure still reaches the
-    * 500 envelope, and the response carries its exact Content-Length. */
-  private def respond(ex: HttpExchange, code: Int)(write: JsonGenerator => Unit): Unit = {
+  /** Send the JSON body `write` renders; a HEAD response gets the
+    * status alone. The whole body is rendered before the headers go
+    * out, so a render failure still reaches the 500 envelope, and the
+    * response carries its exact Content-Length. */
+  private def respond(ex: HttpExchange, code: Int)(write: JsonGenerator => Unit): Unit =
+    if (ex.getRequestMethod == "HEAD") empty(ex, code) else send(ex, code, render(write))
+
+  private def render(write: JsonGenerator => Unit): BlockBuffer = {
     val buf = new BlockBuffer
     val g = MetaJson.factory.createGenerator(new OutputStreamWriter(buf, UTF_8))
     try write(g) finally g.close()
-    ex.setAttribute("graft.size", buf.size)
+    buf
+  }
+
+  private def send(ex: HttpExchange, code: Int, buf: BlockBuffer): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(code, buf.size)
     buf.writeTo(ex.getResponseBody)
   }
 
   /** `{metadata-location, metadata[, config]}`, written in one pass. */
-  private def metadataResponse(ex: HttpExchange, location: String, m: TableMetadata,
-                               config: Option[Map[String, String]]): Unit =
-    respond(ex, 200) { g =>
-      g.writeStartObject()
-      g.writeStringField("metadata-location", location)
-      g.writeFieldName("metadata")
-      MetaJson.writeTable(g, m)
-      config.foreach { c => g.writeFieldName("config"); MetaJson.strings(g, c) }
-      g.writeEndObject()
-    }
+  private def metadataBody(location: String, m: TableMetadata,
+                           config: Option[Map[String, String]]): JsonGenerator => Unit = { g =>
+    g.writeStartObject()
+    g.writeStringField("metadata-location", location)
+    g.writeFieldName("metadata")
+    MetaJson.writeTable(g, m)
+    config.foreach { c => g.writeFieldName("config"); MetaJson.strings(g, c) }
+    g.writeEndObject()
+  }
+
+  // loadTable bodies already sent, by metadata-location, in access order
+  // and at most LoadBodyBytes in all. A body is sent again while the
+  // store hands back the very instance it was rendered from (the store
+  // does so only while the version document's bytes are unchanged) with
+  // the same config. Commit responses are not kept: each one is for a
+  // version no earlier response showed.
+  private final class LoadBody(val m: TableMetadata, val config: Map[String, String],
+                               val buf: BlockBuffer)
+  private val LoadBodyBytes = 16L << 20
+  private val loadBodies = new java.util.LinkedHashMap[String, LoadBody](16, 0.75f, true)
+  private var loadBodiesSize = 0L // guarded by loadBodies
+
+  private def loadBody(location: String, m: TableMetadata,
+                       config: Map[String, String]): BlockBuffer =
+    loadBodies.synchronized(Option(loadBodies.get(location)))
+      .filter(b => (b.m eq m) && b.config == config)
+      .fold {
+        val buf = render(metadataBody(location, m, Some(config)))
+        buf.trim()
+        loadBodies.synchronized {
+          Option(loadBodies.put(location, new LoadBody(m, config, buf)))
+            .foreach(old => loadBodiesSize -= old.buf.size)
+          loadBodiesSize += buf.size
+          val eldest = loadBodies.values.iterator
+          while (loadBodiesSize > LoadBodyBytes && eldest.hasNext) {
+            loadBodiesSize -= eldest.next().buf.size
+            eldest.remove()
+          }
+        }
+        buf
+      }(_.buf)
 
   private def empty(ex: HttpExchange, code: Int): Unit =
     ex.sendResponseHeaders(code, -1)
@@ -293,8 +334,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
       case Some(want) => (catalog.metadataStore.loadVersion(n, t, want), want)
       case None => catalog.metadataStore.load(n, t)
     }
-    metadataResponse(ex, catalog.metadataStore.metadataLocation(n, t, v), m,
-      Some(catalog.config(m.properties)))
+    send(ex, 200, loadBody(catalog.metadataStore.metadataLocation(n, t, v), m,
+      catalog.config(m.properties)))
   }
 
   private def loadTable(ex: HttpExchange, enc: String, t: String): Unit =
@@ -325,8 +366,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     val ups = (b \ "updates").extractOpt[List[JValue]].getOrElse(Nil).map(parseUpdate)
     catalog.commit(Identifier.of(ns(enc), t), reqs, ups)
     val (m, v) = catalog.metadataStore.load(ns(enc).toSeq, t)
-    metadataResponse(ex, catalog.metadataStore.metadataLocation(ns(enc).toSeq, t, v), m,
-      None)
+    respond(ex, 200)(metadataBody(
+      catalog.metadataStore.metadataLocation(ns(enc).toSeq, t, v), m, None))
   }
 
   private def parseReq(j: JValue): Requirement = (j \ "type").extract[String] match {

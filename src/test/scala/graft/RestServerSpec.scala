@@ -450,4 +450,55 @@ class RestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(((m \ "snapshots")(2) \ "deleteFiles").extract[List[JValue]].size == 1)
     assert((m \ "refs" \ "audit" \ "refType").extract[String] == "tag")
   }
+
+  test("a failed HEAD answers its status with no body and logs size=0") {
+    for (p <- Seq("/v1/namespaces/nope_head", "/v1/namespaces/nope_head/tables/t", "/v1/nope")) {
+      val r = req("HEAD", p)
+      assert(r.statusCode() == 404, p)
+      assert(r.body().isEmpty, p)
+      // a bodiless response is complete before the handler logs it
+      val rid = r.headers().firstValue("X-Request-ID").get
+      def line = server.recentLogs.find(_.contains(s"requestId=$rid"))
+      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+      while (line.isEmpty && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(line.exists(_.endsWith(" size=0")), s"log line: $line")
+    }
+  }
+
+  test("repeated loadTable bodies equal a fresh render and follow commits") {
+    val ns = "reuse_rest"
+    val path = s"/v1/namespaces/$ns/tables/t"
+    req("POST", "/v1/namespaces", s"""{"namespace":["$ns"]}""")
+    assert(req("POST", s"/v1/namespaces/$ns/tables",
+      s"""{"name":"t","schema":$tableSchema}""").statusCode() == 200)
+    assert(req("POST", path, """{"updates":[{"action":"append-files",
+      |"files":["a.parquet","b.parquet"],"timestamp-ms":1}]}""".stripMargin).statusCode() == 200)
+    def fresh(): String = {
+      val (m, v) = catalog.metadataStore.load(Seq(ns), "t")
+      val out = new java.io.StringWriter
+      val g = graft.meta.MetaJson.factory.createGenerator(out)
+      g.writeStartObject()
+      g.writeStringField("metadata-location",
+        catalog.metadataStore.metadataLocation(Seq(ns), "t", v))
+      g.writeFieldName("metadata")
+      graft.meta.MetaJson.writeTable(g, m)
+      g.writeFieldName("config")
+      graft.meta.MetaJson.strings(g, catalog.config(m.properties))
+      g.writeEndObject()
+      g.close()
+      out.toString
+    }
+    def load(): HttpResponse[String] = {
+      val r = req("GET", path)
+      assert(r.statusCode() == 200, r.body())
+      assert(r.body() == fresh())
+      r
+    }
+    load()
+    load()
+    assert(req("POST", path, """{"updates":[{"action":"set-properties",
+      |"updates":{"reuse.key":"after"}}]}""".stripMargin).statusCode() == 200)
+    val after = parse(load()) \ "metadata" \ "properties" \ "reuse.key"
+    assert(after.extract[String] == "after")
+  }
 }
