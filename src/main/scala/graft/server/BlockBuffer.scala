@@ -45,6 +45,18 @@ private[server] final class BlockBuffer extends OutputStream {
     blocks(blocks.length - 1) = cur
   }
 
+  /** A new buffer holding the first `n` bytes of this one. */
+  def take(n: Long): BlockBuffer = {
+    val b = new BlockBuffer
+    var left = n
+    blocks.foreach { blk =>
+      val k = math.min(left, if (blk eq cur) pos else blk.length).toInt
+      b.write(blk, 0, k)
+      left -= k
+    }
+    b
+  }
+
   def writeTo(out: OutputStream): Unit =
     blocks.foreach(b => out.write(b, 0, if (b eq cur) pos else b.length))
 }

@@ -61,7 +61,7 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
   // `main.go:113-114` (recovery here is the catch-all → 500 envelope).
 
   private val logger = org.slf4j.LoggerFactory.getLogger(classOf[RestServer])
-  private val recent = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private val recent = new java.util.concurrent.ArrayBlockingQueue[String](100)
 
   /** Last ≤100 access-log lines (for tests / debugging). */
   def recentLogs: Seq[String] =
@@ -138,8 +138,7 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
         f"client=${ex.getRemoteAddress.getAddress.getHostAddress} " +
         f"status=${ex.getResponseCode} latency=$latencyMs%.2fms size=$size"
       logger.info(line)
-      recent.add(line)
-      while (recent.size > 100) recent.poll()
+      while (!recent.offer(line)) recent.poll()
       ex.close()
     }
   }
@@ -178,48 +177,60 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     buf.writeTo(ex.getResponseBody)
   }
 
-  /** `{metadata-location, metadata[, config]}`, written in one pass. */
-  private def metadataBody(location: String, m: TableMetadata,
-                           config: Option[Map[String, String]]): JsonGenerator => Unit = { g =>
-    g.writeStartObject()
-    g.writeStringField("metadata-location", location)
-    g.writeFieldName("metadata")
-    MetaJson.writeTable(g, m)
-    config.foreach { c => g.writeFieldName("config"); MetaJson.strings(g, c) }
-    g.writeEndObject()
-  }
-
-  // loadTable bodies already sent, by metadata-location, in access order
-  // and at most LoadBodyBytes in all. A body is sent again while the
-  // store hands back the very instance it was rendered from (the store
-  // does so only while the version document's bytes are unchanged) with
-  // the same config. Commit responses are not kept: each one is for a
-  // version no earlier response showed.
-  private final class LoadBody(val m: TableMetadata, val config: Map[String, String],
-                               val buf: BlockBuffer)
-  private val LoadBodyBytes = 16L << 20
-  private val loadBodies = new java.util.LinkedHashMap[String, LoadBody](16, 0.75f, true)
+  // each table's loadTable body `{metadata-location, metadata, config}`
+  // for its newest version rendered so far, in access order and at most
+  // LoadBodyBytes in all; `metadataEnd` is where the config member
+  // starts. A body is sent again while the store hands back the very
+  // instance it was rendered from (the store does so only while the
+  // version document's bytes are unchanged) with the same config. A load
+  // of an older version of the same table (one that raced a commit, or
+  // `?version=N`) is rendered but does not displace the newer body.
+  private final class LoadBody(val version: Int, val m: TableMetadata,
+                               val config: Map[String, String], val buf: BlockBuffer,
+                               val metadataEnd: Long)
+  private val LoadBodyBytes = 32L << 20
+  private val loadBodies = new java.util.LinkedHashMap[(Seq[String], String), LoadBody](
+    16, 0.75f, true)
   private var loadBodiesSize = 0L // guarded by loadBodies
 
-  private def loadBody(location: String, m: TableMetadata,
-                       config: Map[String, String]): BlockBuffer =
-    loadBodies.synchronized(Option(loadBodies.get(location)))
-      .filter(b => (b.m eq m) && b.config == config)
-      .fold {
-        val buf = render(metadataBody(location, m, Some(config)))
+  /** The loadTable body of version `v` of the table, rendered in one
+    * pass unless the kept one is for this very instance. */
+  private def loadBody(n: Seq[String], t: String, v: Int, m: TableMetadata,
+                       config: Map[String, String]): LoadBody =
+    loadBodies.synchronized(Option(loadBodies.get((n, t))))
+      .filter(b => (b.m eq m) && b.version == v && b.config == config)
+      .getOrElse {
+        val buf = new BlockBuffer
+        val g = MetaJson.factory.createGenerator(new OutputStreamWriter(buf, UTF_8))
+        val metadataEnd = try {
+          g.writeStartObject()
+          g.writeStringField("metadata-location", catalog.metadataStore.metadataLocation(n, t, v))
+          g.writeFieldName("metadata")
+          MetaJson.writeTable(g, m)
+          g.flush()
+          val end = buf.size
+          g.writeFieldName("config")
+          MetaJson.strings(g, config)
+          g.writeEndObject()
+          end
+        } finally g.close()
         buf.trim()
+        val body = new LoadBody(v, m, config, buf, metadataEnd)
         loadBodies.synchronized {
-          Option(loadBodies.put(location, new LoadBody(m, config, buf)))
-            .foreach(old => loadBodiesSize -= old.buf.size)
-          loadBodiesSize += buf.size
-          val eldest = loadBodies.values.iterator
-          while (loadBodiesSize > LoadBodyBytes && eldest.hasNext) {
-            loadBodiesSize -= eldest.next().buf.size
-            eldest.remove()
+          val kept = loadBodies.get((n, t))
+          if (kept == null || kept.m.tableUuid != m.tableUuid || kept.version <= v) {
+            if (kept != null) loadBodiesSize -= kept.buf.size
+            loadBodies.put((n, t), body)
+            loadBodiesSize += buf.size
+            val eldest = loadBodies.values.iterator
+            while (loadBodiesSize > LoadBodyBytes && eldest.hasNext) {
+              loadBodiesSize -= eldest.next().buf.size
+              eldest.remove()
+            }
           }
         }
-        buf
-      }(_.buf)
+        body
+      }
 
   private def empty(ex: HttpExchange, code: Int): Unit =
     ex.sendResponseHeaders(code, -1)
@@ -334,8 +345,7 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
       case Some(want) => (catalog.metadataStore.loadVersion(n, t, want), want)
       case None => catalog.metadataStore.load(n, t)
     }
-    send(ex, 200, loadBody(catalog.metadataStore.metadataLocation(n, t, v), m,
-      catalog.config(m.properties)))
+    send(ex, 200, loadBody(n, t, v, m, catalog.config(m.properties)).buf)
   }
 
   private def loadTable(ex: HttpExchange, enc: String, t: String): Unit =
@@ -365,9 +375,14 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     val reqs = (b \ "requirements").extractOpt[List[JValue]].getOrElse(Nil).map(parseReq)
     val ups = (b \ "updates").extractOpt[List[JValue]].getOrElse(Nil).map(parseUpdate)
     catalog.commit(Identifier.of(ns(enc), t), reqs, ups)
-    val (m, v) = catalog.metadataStore.load(ns(enc).toSeq, t)
-    respond(ex, 200)(metadataBody(
-      catalog.metadataStore.metadataLocation(ns(enc).toSeq, t, v), m, None))
+    val n = ns(enc).toSeq
+    val (m, v) = catalog.metadataStore.load(n, t)
+    // `{metadata-location, metadata}`: the next load's body up to its
+    // config member, so the new version is rendered once for both
+    val kept = loadBody(n, t, v, m, catalog.config(m.properties))
+    val buf = kept.buf.take(kept.metadataEnd)
+    buf.write('}')
+    send(ex, 200, buf)
   }
 
   private def parseReq(j: JValue): Requirement = (j \ "type").extract[String] match {
