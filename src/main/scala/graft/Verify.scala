@@ -16,8 +16,8 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated query-name filter for local iteration
-    // (same contract as Bench's SPARK_GRAFT_ONLY); the driver sets no
-    // filter and dumps the full pack
+    // (tools/compare_only.py compares exactly that subset); the driver
+    // sets no filter and dumps the full pack
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     SparkEntry.queries

@@ -61,6 +61,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
   // `main.go:113-114` (recovery here is the catch-all → 500 envelope).
 
   private val logger = org.slf4j.LoggerFactory.getLogger(classOf[RestServer])
+  // a caller's X-Request-ID is kept when it is safe to log verbatim
+  private val RequestIdPattern = "[A-Za-z0-9._:-]{1,128}".r
   private val recent = new java.util.concurrent.ArrayBlockingQueue[String](100)
 
   /** Last ≤100 access-log lines (for tests / debugging). */
@@ -78,7 +80,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
 
   private def handle(ex: HttpExchange): Unit = {
     val t0 = System.nanoTime()
-    val requestId = java.util.UUID.randomUUID().toString
+    val requestId = Option(ex.getRequestHeaders.getFirst("X-Request-ID"))
+      .filter(RequestIdPattern.matches).getOrElse(java.util.UUID.randomUUID().toString)
     ex.getResponseHeaders.set("X-Request-ID", requestId)
     cors(ex)
     val method = ex.getRequestMethod
@@ -143,13 +146,14 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     }
   }
 
-  private def ns(encoded: String): Array[String] =
-    java.net.URLDecoder.decode(encoded, "UTF-8").split(Unit31, -1)
+  /** A namespace path segment; `getPath` has already decoded it. */
+  private def ns(seg: String): Array[String] = seg.split(Unit31, -1)
 
-  private def query(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getQuery).getOrElse("").split("&").filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2)
-        k -> java.net.URLDecoder.decode(v, "UTF-8") }.toMap
+  private def query(ex: HttpExchange): Map[String, String] = {
+    def dec(s: String) = java.net.URLDecoder.decode(s, UTF_8)
+    Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&").filter(_.contains("="))
+      .map { kv => val Array(k, v) = kv.split("=", 2); dec(k) -> dec(v) }.toMap
+  }
 
   private def body(ex: HttpExchange): JValue =
     JsonMethods.parse(new String(ex.getRequestBody.readAllBytes(), UTF_8))
@@ -265,36 +269,36 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
       "properties" -> toJObj(props)))
   }
 
-  private def loadNamespace(ex: HttpExchange, enc: String): Unit = {
-    val n = ns(enc)
+  private def loadNamespace(ex: HttpExchange, seg: String): Unit = {
+    val n = ns(seg)
     val props = catalog.metadataStore.loadNamespace(n.toSeq)
     json(ex, 200, JObject("namespace" -> JArray(n.map(JString(_)).toList),
       "properties" -> toJObj(props)))
   }
 
-  private def headNamespace(ex: HttpExchange, enc: String): Unit =
-    if (catalog.namespaceExists(ns(enc))) empty(ex, 204)
-    else error(ex, 404, "NoSuchNamespaceException", s"namespace ${ns(enc).mkString(".")}")
+  private def headNamespace(ex: HttpExchange, seg: String): Unit =
+    if (catalog.namespaceExists(ns(seg))) empty(ex, 204)
+    else error(ex, 404, "NoSuchNamespaceException", s"namespace ${ns(seg).mkString(".")}")
 
-  private def dropNamespace(ex: HttpExchange, enc: String): Unit = {
-    catalog.dropNamespace(ns(enc), cascade = false)
+  private def dropNamespace(ex: HttpExchange, seg: String): Unit = {
+    catalog.dropNamespace(ns(seg), cascade = false)
     empty(ex, 204)
   }
 
-  private def updateNamespaceProps(ex: HttpExchange, enc: String): Unit = {
+  private def updateNamespaceProps(ex: HttpExchange, seg: String): Unit = {
     val b = body(ex)
     val removals = (b \ "removals").extractOpt[List[String]].getOrElse(Nil)
     val updates = (b \ "updates").extractOpt[Map[String, String]].getOrElse(Map.empty)
     val (updated, removed, missing) =
-      catalog.updateNamespaceProperties(ns(enc).toSeq, removals, updates)
+      catalog.updateNamespaceProperties(ns(seg).toSeq, removals, updates)
     json(ex, 200, JObject(
       "updated" -> JArray(updated.map(JString(_)).toList),
       "removed" -> JArray(removed.map(JString(_)).toList),
       "missing" -> JArray(missing.map(JString(_)).toList)))
   }
 
-  private def listTables(ex: HttpExchange, enc: String): Unit = {
-    val idents = catalog.listTables(ns(enc))
+  private def listTables(ex: HttpExchange, seg: String): Unit = {
+    val idents = catalog.listTables(ns(seg))
     json(ex, 200, JObject("identifiers" -> JArray(idents.map { id =>
       JObject("namespace" -> JArray(id.namespace.map(JString(_)).toList),
         "name" -> JString(id.name))
@@ -305,8 +309,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     SchemaDef((j \ "schemaId").extractOpt[Int].getOrElse(0),
       (j \ "fields").extract[List[FieldDef]])
 
-  private def createTable(ex: HttpExchange, enc: String): Unit = {
-    val n = ns(enc)
+  private def createTable(ex: HttpExchange, seg: String): Unit = {
+    val n = ns(seg)
     val b = body(ex)
     if ((b \ "stage-create").extractOpt[Boolean].contains(true)) {
       error(ex, 501, "NotImplementedException", "stage-create is not supported")
@@ -348,34 +352,34 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     send(ex, 200, loadBody(n, t, v, m, catalog.config(m.properties)).buf)
   }
 
-  private def loadTable(ex: HttpExchange, enc: String, t: String): Unit =
-    respondLoadTable(ex, ns(enc).toSeq, t,
+  private def loadTable(ex: HttpExchange, seg: String, t: String): Unit =
+    respondLoadTable(ex, ns(seg).toSeq, t,
       query(ex).get("version").map(_.toInt))
 
-  private def headTable(ex: HttpExchange, enc: String, t: String): Unit =
-    if (catalog.metadataStore.tableExists(ns(enc).toSeq, t)) empty(ex, 204)
+  private def headTable(ex: HttpExchange, seg: String, t: String): Unit =
+    if (catalog.metadataStore.tableExists(ns(seg).toSeq, t)) empty(ex, 204)
     else error(ex, 404, "NoSuchTableException", s"table $t")
 
   /** DELETE with purgeRequested=true → HTTP 400 carrying a 501-code body,
     * preserving the reference's status/body mismatch (`tables.go:288-295`). */
-  private def dropTable(ex: HttpExchange, enc: String, t: String): Unit = {
+  private def dropTable(ex: HttpExchange, seg: String, t: String): Unit = {
     if (query(ex).get("purgeRequested").contains("true")) {
       error(ex, 400, "NotImplementedException", "purge is not supported")
       return
     }
-    if (!catalog.metadataStore.tableExists(ns(enc).toSeq, t))
-      throw new NoSuchTableException(Identifier.of(ns(enc), t))
-    catalog.metadataStore.dropTable(ns(enc).toSeq, t)
+    if (!catalog.metadataStore.tableExists(ns(seg).toSeq, t))
+      throw new NoSuchTableException(Identifier.of(ns(seg), t))
+    catalog.metadataStore.dropTable(ns(seg).toSeq, t)
     empty(ex, 204)
   }
 
   /** POST commit — body identifier ignored, URL params win (`tables.go:171`). */
-  private def updateTable(ex: HttpExchange, enc: String, t: String): Unit = {
+  private def updateTable(ex: HttpExchange, seg: String, t: String): Unit = {
     val b = body(ex)
     val reqs = (b \ "requirements").extractOpt[List[JValue]].getOrElse(Nil).map(parseReq)
     val ups = (b \ "updates").extractOpt[List[JValue]].getOrElse(Nil).map(parseUpdate)
-    catalog.commit(Identifier.of(ns(enc), t), reqs, ups)
-    val n = ns(enc).toSeq
+    catalog.commit(Identifier.of(ns(seg), t), reqs, ups)
+    val n = ns(seg).toSeq
     val (m, v) = catalog.metadataStore.load(n, t)
     // `{metadata-location, metadata}`: the next load's body up to its
     // config member, so the new version is rendered once for both

@@ -501,4 +501,65 @@ class RestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val after = parse(load()) \ "metadata" \ "properties" \ "reuse.key"
     assert(after.extract[String] == "after")
   }
+
+  test("percent-encoded namespace and table names are decoded once, in paths and ?parent=") {
+    for (n <- Seq("""["a+b"]""", """["50%"]""", """["a+b","c&d=e"]""", """["a+b","c&d=e","g"]"""))
+      assert(req("POST", "/v1/namespaces", s"""{"namespace":$n}""").statusCode() == 200, n)
+    assert(req("POST", "/v1/namespaces/a%2Bb/tables",
+      s"""{"name":"t+1","schema":$tableSchema}""").statusCode() == 200)
+    for ((p, name) <- Seq("/v1/namespaces/a%2Bb" -> List("a+b"),
+        "/v1/namespaces/50%25" -> List("50%"))) {
+      val r = req("GET", p)
+      assert(r.statusCode() == 200, s"$p: ${r.body()}")
+      assert((parse(r) \ "namespace").extract[List[String]] == name, p)
+      assert(req("HEAD", p).statusCode() == 204, p)
+    }
+    val t = req("GET", "/v1/namespaces/a%2Bb/tables/t%2B1")
+    assert(t.statusCode() == 200, t.body())
+    assert(req("HEAD", "/v1/namespaces/a%2Bb/tables/t%2B1").statusCode() == 204)
+    val idents = parse(req("GET", "/v1/namespaces/a%2Bb/tables")) \ "identifiers"
+    assert((idents(0) \ "name").extract[String] == "t+1")
+    def children(parent: String): List[List[String]] = {
+      val r = req("GET", s"/v1/namespaces?parent=$parent")
+      assert(r.statusCode() == 200, s"$parent: ${r.body()}")
+      (parse(r) \ "namespaces").extract[List[List[String]]]
+    }
+    assert(children("a%2Bb") == List(List("a+b", "c&d=e")))
+    assert(children("a%2Bb%1Fc%26d%3De") == List(List("a+b", "c&d=e", "g")))
+
+    // the same names through the federation client, whose path segments
+    // percent-encode '%', '+', '&' and '='
+    val store = new graft.meta.RestMetadataStore(base)
+    assert(store.namespaceExists(Seq("a+b")) && store.namespaceExists(Seq("50%")))
+    store.setNamespaceProperties(Seq("50%"), Map("k" -> "v"))
+    assert(store.loadNamespace(Seq("50%")) == Map("k" -> "v"))
+    assert(store.listNamespaces(Seq("a+b")) == Seq(Seq("a+b", "c&d=e")))
+    assert(store.listNamespaces(Seq("a+b", "c&d=e")) == Seq(Seq("a+b", "c&d=e", "g")))
+    assert(store.listTables(Seq("a+b")) == Seq("t+1"))
+    assert(store.tableExists(Seq("a+b"), "t+1"))
+    assert(store.load(Seq("a+b"), "t+1")._2 == 1)
+    store.createNamespace(Seq("x y%&"), Map.empty)
+    assert(store.namespaceExists(Seq("x y%&")))
+    assert(req("HEAD", "/v1/namespaces/x%20y%25%26").statusCode() == 204)
+  }
+
+  test("a caller's X-Request-ID is echoed and logged; an unsafe one is replaced") {
+    def send(id: String): String = {
+      val r = client.send(HttpRequest.newBuilder(URI.create(base + "/v1/config"))
+        .header("X-Request-ID", id).GET().build(), HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200)
+      val rid = r.headers().firstValue("X-Request-ID").get
+      def line = server.recentLogs.find(_.startsWith(s"requestId=$rid "))
+      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+      while (line.isEmpty && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(line.isDefined, s"no log line for requestId=$rid")
+      rid
+    }
+    assert(send("req-42") == "req-42")
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    for (bad <- Seq("r" * 200, "req 42")) {
+      val rid = send(bad)
+      assert(rid.matches(uuid), s"$bad came back as $rid")
+    }
+  }
 }
