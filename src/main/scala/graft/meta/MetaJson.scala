@@ -16,7 +16,17 @@ import com.fasterxml.jackson.core.util.{BufferRecycler, DefaultPrettyPrinter}
   * escaping and the pretty layout match too.
   * Identical bytes keep on-disk documents, wire bodies and the
   * content-hash body names stable. `MetaJsonPropertySpec` pins this:
-  * a field added to a case class but not here fails it. */
+  * a field added to a case class but not here fails it.
+  *
+  * Snapshot payloads are rendered once per process: a snapshot's four
+  * payload values (`files`, `fileStats`, `deleteFiles`, `fileSeqs`) are
+  * kept as compact JSON [[Fragments]] under its `bodyRef`, and compact
+  * output splices them in with `writeRawValue`. The generator copies a
+  * fragment's characters unchanged into the same writer a fresh render
+  * would have filled, so escaping and the writer's encoding give the
+  * same bytes. A version's compact render then costs its headers, not
+  * its history; pretty output (slim version documents) always renders
+  * in place. */
 object MetaJson {
 
   /** json4s's own factory: its generators escape exactly as json4s does. */
@@ -26,7 +36,80 @@ object MetaJson {
   def pretty(m: TableMetadata): String = render(pretty = true)(writeTable(_, m))
 
   /** Snapshot-body document text (compact; its hash names the body). */
-  def body(b: SnapshotBodies.Body): String = render(pretty = false)(writeBody(_, b))
+  def body(b: SnapshotBodies.Body): String = body(fragments(b))
+
+  /** The body document spliced from its payload's fragments: the
+    * compact layout, whose field names need no escaping. */
+  private[meta] def body(f: Fragments): String =
+    new java.lang.StringBuilder(f.chars.toInt + 48)
+      .append("{\"files\":").append(f.files)
+      .append(",\"fileStats\":").append(f.fileStats)
+      .append(",\"deleteFiles\":").append(f.deleteFiles)
+      .append(",\"fileSeqs\":").append(f.fileSeqs).append('}').toString
+
+  /** A snapshot payload's four values as compact JSON, with the
+    * instances they were rendered from. */
+  private[meta] final class Fragments(val src: SnapshotBodies.Body, val files: String,
+                        val fileStats: String, val deleteFiles: String,
+                        val fileSeqs: String) {
+    def chars: Long =
+      files.length.toLong + fileStats.length + deleteFiles.length + fileSeqs.length
+
+    /** Whether `s`'s payload renders as these fragments: the very
+      * instances they came from, or else equal ones in the same
+      * iteration order (a map renders in its iteration order, which
+      * map equality ignores). */
+    def renders(s: SnapshotDef): Boolean = {
+      def list[A](a: List[A], b: List[A]) = (a eq b) || a == b
+      def map[V](a: Map[String, V], b: Map[String, V]) =
+        (a eq b) || (a.size == b.size && a.iterator.sameElements(b.iterator))
+      list(src.files, s.files) && map(src.fileStats, s.fileStats) &&
+        list(src.deleteFiles, s.deleteFiles) && map(src.fileSeqs, s.fileSeqs)
+    }
+  }
+
+  /** Render `b`'s payload values, one compact pass each. */
+  private[meta] def fragments(b: SnapshotBodies.Body): Fragments = {
+    def value(write: JsonGenerator => Unit) = render(pretty = false)(write)
+    new Fragments(b, value(g => array(g, b.files)(g.writeString)),
+      value(writeFileStats(_, b.fileStats)), value(writeDeleteFiles(_, b.deleteFiles)),
+      value(writeFileSeqs(_, b.fileSeqs)))
+  }
+
+  // bodyRef → the fragments last rendered under that name, in access
+  // order, at most FragmentChars characters in all. Entries are keyed by
+  // name alone: a hit also needs `renders`, so a stale or reused name
+  // (another table's body of the same name, a snapshot whose payload
+  // changed under its old ref) is rendered fresh and replaces the entry.
+  private[meta] val FragmentChars = 32L << 20
+  private val kept = new java.util.LinkedHashMap[String, Fragments](64, 0.75f, true)
+  private var keptChars = 0L // guarded by kept
+
+  /** The fragments kept under `name`, if any. */
+  private[meta] def keptFragments(name: String): Option[Fragments] =
+    kept.synchronized(Option(kept.get(name)))
+
+  /** Keep `f` under the body name `name`, evicting the least recently
+    * used fragments past the bound. */
+  private[meta] def keep(name: String, f: Fragments): Unit = kept.synchronized {
+    val old = kept.put(name, f)
+    if (old != null) keptChars -= old.chars
+    keptChars += f.chars
+    val eldest = kept.values.iterator
+    while (keptChars > FragmentChars && eldest.hasNext) {
+      keptChars -= eldest.next().chars
+      eldest.remove()
+    }
+  }
+
+  /** The fragments of snapshot `s` with body name `name`: the kept ones
+    * when they render `s`, else rendered now and kept. */
+  private def fragments(name: String, s: SnapshotDef): Fragments =
+    keptFragments(name).filter(_.renders(s)).getOrElse {
+      val f = fragments(SnapshotBodies.Body(s.files, s.fileStats, s.deleteFiles, s.fileSeqs))
+      keep(name, f)
+      f
+    }
 
   private def render(pretty: Boolean)(write: JsonGenerator => Unit): String = {
     val out = new SegmentedStringWriter(new BufferRecycler)
@@ -106,37 +189,48 @@ object MetaJson {
   }
 
   private def writeSnapshot(g: JsonGenerator, s: SnapshotDef): Unit = {
+    val spliced =
+      if (g.getPrettyPrinter == null) s.bodyRef.map(fragments(_, s)) else None
     g.writeStartObject()
     g.writeNumberField("snapshotId", s.snapshotId)
     g.writeNumberField("timestampMs", s.timestampMs)
     g.writeStringField("operation", s.operation)
-    files(g, s.files)
+    g.writeFieldName("files")
+    spliced match {
+      case Some(f) => g.writeRawValue(f.files)
+      case None => array(g, s.files)(g.writeString)
+    }
     g.writeFieldName("summary")
     strings(g, s.summary)
-    payload(g, s.fileStats, s.deleteFiles, s.fileSeqs)
+    spliced match {
+      case Some(f) => writePayload(g, f)
+      case None =>
+        g.writeFieldName("fileStats")
+        writeFileStats(g, s.fileStats)
+        g.writeFieldName("deleteFiles")
+        writeDeleteFiles(g, s.deleteFiles)
+        g.writeFieldName("fileSeqs")
+        writeFileSeqs(g, s.fileSeqs)
+    }
     s.parentId.foreach(g.writeNumberField("parentId", _))
     s.bodyRef.foreach(g.writeStringField("bodyRef", _))
     g.writeEndObject()
   }
 
-  private def writeBody(g: JsonGenerator, b: SnapshotBodies.Body): Unit = {
-    g.writeStartObject()
-    files(g, b.files)
-    payload(g, b.fileStats, b.deleteFiles, b.fileSeqs)
-    g.writeEndObject()
-  }
-
-  private def files(g: JsonGenerator, fs: List[String]): Unit = {
-    g.writeFieldName("files")
-    array(g, fs)(g.writeString)
+  private def raw(g: JsonGenerator, name: String, json: String): Unit = {
+    g.writeFieldName(name)
+    g.writeRawValue(json)
   }
 
   /** The fields after `files` (and a snapshot's `summary`) that a
     * snapshot and its body share, in their common order. */
-  private def payload(g: JsonGenerator, fileStats: Map[String, List[ColStatDef]],
-                      deleteFiles: List[DeleteFileDef],
-                      fileSeqs: Map[String, Long]): Unit = {
-    g.writeFieldName("fileStats")
+  private def writePayload(g: JsonGenerator, f: Fragments): Unit = {
+    raw(g, "fileStats", f.fileStats)
+    raw(g, "deleteFiles", f.deleteFiles)
+    raw(g, "fileSeqs", f.fileSeqs)
+  }
+
+  private def writeFileStats(g: JsonGenerator, fileStats: Map[String, List[ColStatDef]]): Unit =
     obj(g, fileStats) { cols =>
       array(g, cols) { c =>
         g.writeStartObject()
@@ -149,7 +243,8 @@ object MetaJson {
         g.writeEndObject()
       }
     }
-    g.writeFieldName("deleteFiles")
+
+  private def writeDeleteFiles(g: JsonGenerator, deleteFiles: List[DeleteFileDef]): Unit =
     array(g, deleteFiles) { d =>
       g.writeStartObject()
       g.writeStringField("path", d.path)
@@ -160,9 +255,9 @@ object MetaJson {
       g.writeNumberField("bytes", d.bytes)
       g.writeEndObject()
     }
-    g.writeFieldName("fileSeqs")
+
+  private def writeFileSeqs(g: JsonGenerator, fileSeqs: Map[String, Long]): Unit =
     obj(g, fileSeqs)(g.writeNumber(_: Long))
-  }
 
   private def array[A](g: JsonGenerator, xs: List[A])(each: A => Unit): Unit = {
     g.writeStartArray()

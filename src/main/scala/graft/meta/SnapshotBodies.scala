@@ -77,9 +77,9 @@ object SnapshotBodies {
       ((b.deleteFiles eq s.deleteFiles) || b.deleteFiles == s.deleteFiles) &&
       ((b.fileSeqs eq s.fileSeqs) || b.fileSeqs == s.fileSeqs)
 
-  private def hashHex(s: String): String =
+  private def hashHex(bytes: Array[Byte]): String =
     java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(UTF_8))
+      .digest(bytes)
       .take(8).map("%02x".format(_)).mkString
 
   /** Persist `m`'s snapshot payloads into directory `dir` of `blobs` and
@@ -97,10 +97,14 @@ object SnapshotBodies {
         case Some(n) => reused += n; n
         case None =>
           val body = Body(s.files, s.fileStats, s.deleteFiles, s.fileSeqs)
-          val json = MetaJson.body(body)
-          val n = s"snap-${s.snapshotId}-${hashHex(json)}.body.json"
-          blobs.putIfAbsent(blobs.resolve(dir, n), json.getBytes(UTF_8))
+          // the one render of this payload: it names the body, fills the
+          // file, and its fragments serve every compact render after it
+          val fragments = MetaJson.fragments(body)
+          val bytes = MetaJson.body(fragments).getBytes(UTF_8)
+          val n = s"snap-${s.snapshotId}-${hashHex(bytes)}.body.json"
+          blobs.putIfAbsent(blobs.resolve(dir, n), bytes)
           cachePut(s"$dir/$n", body)
+          MetaJson.keep(n, fragments)
           n
       }
       s.copy(files = Nil, fileStats = Map.empty, deleteFiles = Nil,

@@ -45,16 +45,26 @@ private[server] final class BlockBuffer extends OutputStream {
     blocks(blocks.length - 1) = cur
   }
 
-  /** A new buffer holding the first `n` bytes of this one. */
+  /** A new buffer holding the first `n` bytes of this one, for a buffer
+    * that is no longer written: the new one shares the blocks `n` covers
+    * whole and copies only the part of the block it ends in. */
   def take(n: Long): BlockBuffer = {
     val b = new BlockBuffer
     var left = n
     blocks.foreach { blk =>
       val k = math.min(left, if (blk eq cur) pos else blk.length).toInt
-      b.write(blk, 0, k)
+      if (k == blk.length) b.share(blk) else b.write(blk, 0, k)
       left -= k
     }
     b
+  }
+
+  /** Append a full block that is never written again. */
+  private def share(blk: Array[Byte]): Unit = {
+    before += pos
+    blocks += blk
+    cur = blk
+    pos = blk.length
   }
 
   def writeTo(out: OutputStream): Unit =

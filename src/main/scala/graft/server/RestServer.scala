@@ -86,8 +86,10 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     cors(ex)
     val method = ex.getRequestMethod
     val path = ex.getRequestURI.getPath
-    val segs = path.split("/").filter(_.nonEmpty).toList
     try {
+      // split before decoding, so an encoded '/' stays inside its name
+      val segs = ex.getRequestURI.getRawPath.split("/").filter(_.nonEmpty)
+        .map(decodeSegment).toList
       (method, segs) match {
         case ("OPTIONS", _) => empty(ex, 204) // CORS preflight
         case ("GET", List("health")) => json(ex, 200, JObject("status" -> JString("ok")))
@@ -132,21 +134,32 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
       case e: Exception =>
         error(ex, 500, "InternalServerError", String.valueOf(e.getMessage))
     } finally {
-      val latencyMs = (System.nanoTime() - t0) / 1e6
+      // hundredths of a millisecond, rounded half up
+      val centiMs = (System.nanoTime() - t0 + 5000) / 10000
       // the length sent, from this exchange's own headers: exchange
       // attributes live on the shared HttpContext, so concurrent requests
       // would read each other's values there
       val size = Option(ex.getResponseHeaders.getFirst("Content-Length")).fold(0L)(_.toLong)
-      val line = f"requestId=$requestId method=$method path=$path " +
-        f"client=${ex.getRemoteAddress.getAddress.getHostAddress} " +
-        f"status=${ex.getResponseCode} latency=$latencyMs%.2fms size=$size"
+      val line = new java.lang.StringBuilder(160)
+        .append("requestId=").append(requestId).append(" method=").append(method)
+        .append(" path=").append(path)
+        .append(" client=").append(ex.getRemoteAddress.getAddress.getHostAddress)
+        .append(" status=").append(ex.getResponseCode)
+        .append(" latency=").append(centiMs / 100).append('.')
+        .append(if (centiMs % 100 < 10) "0" else "").append(centiMs % 100)
+        .append("ms size=").append(size).toString
       logger.info(line)
       while (!recent.offer(line)) recent.poll()
       ex.close()
     }
   }
 
-  /** A namespace path segment; `getPath` has already decoded it. */
+  /** Percent-decode one raw path segment. In a path '+' is a plus sign,
+    * not the space form decoding makes of it. */
+  private def decodeSegment(raw: String): String =
+    java.net.URLDecoder.decode(raw.replace("+", "%2B"), UTF_8)
+
+  /** A namespace path segment; `handle` has already decoded it. */
   private def ns(seg: String): Array[String] = seg.split(Unit31, -1)
 
   private def query(ex: HttpExchange): Map[String, String] = {

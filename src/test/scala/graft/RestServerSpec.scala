@@ -562,4 +562,29 @@ class RestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rid.matches(uuid), s"$bad came back as $rid")
     }
   }
+
+  test("names containing '/' are one path segment, over a raw GET and through RestMetadataStore") {
+    assert(req("POST", "/v1/namespaces", """{"namespace":["slash/ns"]}""").statusCode() == 200)
+    val created = req("POST", "/v1/namespaces/slash%2Fns/tables",
+      s"""{"name":"t/1","schema":$tableSchema}""")
+    assert(created.statusCode() == 200, created.body())
+    val n = req("GET", "/v1/namespaces/slash%2Fns")
+    assert(n.statusCode() == 200, n.body())
+    assert((parse(n) \ "namespace").extract[List[String]] == List("slash/ns"))
+    assert(req("HEAD", "/v1/namespaces/slash%2Fns").statusCode() == 204)
+    val t = req("GET", "/v1/namespaces/slash%2Fns/tables/t%2F1")
+    assert(t.statusCode() == 200, t.body())
+    assert(req("HEAD", "/v1/namespaces/slash%2Fns/tables/t%2F1").statusCode() == 204)
+
+    // the federation client encodes '/' in a segment as %2F
+    val store = new graft.meta.RestMetadataStore(base)
+    assert(store.namespaceExists(Seq("slash/ns")))
+    assert(store.loadNamespace(Seq("slash/ns")) == Map.empty)
+    assert(store.tableExists(Seq("slash/ns"), "t/1"))
+    assert(store.load(Seq("slash/ns"), "t/1")._2 == 1)
+    val m = store.commitOps(Seq("slash/ns"), "t/1", Nil,
+      Seq(graft.commit.MetadataUpdate.SetProperties(Map("slash.key" -> "v"))))
+    assert(m.properties.get("slash.key").contains("v"))
+    assert(store.load(Seq("slash/ns"), "t/1")._2 == 2)
+  }
 }
