@@ -14,10 +14,6 @@ sealed trait Requirement {
   def check(m: TableMetadata): Option[String]
 }
 object Requirement {
-  case object AssertCreate extends Requirement {
-    def check(m: TableMetadata): Option[String] =
-      Some("table already exists") // checked pre-load; loaded ⇒ exists
-  }
   final case class AssertTableUuid(uuid: String) extends Requirement {
     def check(m: TableMetadata): Option[String] =
       if (m.tableUuid == uuid) None

@@ -70,6 +70,11 @@ trait CasBlobStore {
   *   <wh>/<ns...>/<table>/metadata/snap-<id>-<hash>.body.json
   *   <wh>/<ns...>/<table>/data/...             parquet files
   * }}}
+  * Each namespace level and table name is exactly one directory: `%` and
+  * `/` inside a name are written `%25` and `%2F`, and the names `.` and
+  * `..` are written `%2E` and `%2E%2E`. No two names share a directory,
+  * no name leaves its parent, and a name without those characters is
+  * its own directory name.
   *
   * Concurrency: version documents and namespace markers are immutable
   * once created and created with [[CasBlobStore.putIfAbsent]] — two
@@ -99,7 +104,8 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
 
   def warehouse: String = blobs.root
 
-  private def nsDir(ns: Seq[String]): String = ns.foldLeft(blobs.root)(blobs.resolve)
+  private def nsDir(ns: Seq[String]): String =
+    ns.foldLeft(blobs.root)((dir, name) => blobs.resolve(dir, BlobMetaStore.segment(name)))
   private def tableDir(ns: Seq[String], t: String): String = nsDir(ns :+ t)
   private def metaDir(ns: Seq[String], t: String): String =
     blobs.resolve(tableDir(ns, t), "metadata")
@@ -131,7 +137,7 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
 
   def listNamespaces(parent: Seq[String]): Seq[Seq[String]] = {
     if (parent.nonEmpty && !namespaceExists(parent)) throw noSuchNamespace(parent)
-    blobs.list(nsDir(parent)).map(parent :+ _).filter(namespaceExists)
+    blobs.list(nsDir(parent)).map(n => parent :+ BlobMetaStore.name(n)).filter(namespaceExists)
       .sortBy(_.mkString(""))
   }
 
@@ -154,7 +160,7 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
 
   def listTables(ns: Seq[String]): Seq[String] = {
     if (!namespaceExists(ns)) throw noSuchNamespace(ns)
-    blobs.list(nsDir(ns)).filter(n => blobs.contains(metaDir(ns, n))).sorted
+    blobs.list(nsDir(ns)).map(BlobMetaStore.name).filter(t => blobs.contains(metaDir(ns, t))).sorted
   }
 
   /** One non-recursive listing of `metadata/`; temp names never match. */
@@ -223,16 +229,26 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
     won
   }
 
+  /** Metadata-only, like the reference (purge → 501, tables.go:288-295).
+    * Of racing drops, the one that creates the drop claim beside the
+    * table's directory drops it. The claim goes only after the table has,
+    * so a drop that creates it later finds no table and reports false. */
   def dropTable(ns: Seq[String], t: String): Boolean = {
-    if (!tableExists(ns, t)) return false
-    // metadata-only drop, like the reference (purge → 501, tables.go:288-295)
-    SnapshotBodies.invalidateScope(metaDir(ns, t))
-    BlobMetaStore.evictUnder(metaDir(ns, t))
-    blobs.deleteTree(metaDir(ns, t))
-    Seq(dataDir(ns, t), tableDir(ns, t)).foreach { d =>
-      if (blobs.list(d).isEmpty) blobs.delete(d)
-    }
-    true
+    // '%' followed by 'd' is in no name's directory, so no table is here
+    val claim = blobs.resolve(nsDir(ns), BlobMetaStore.segment(t) + "%drop")
+    if (!tableExists(ns, t) || !blobs.putIfAbsent(claim, Array.emptyByteArray)) return false
+    try {
+      val dropped = tableExists(ns, t)
+      if (dropped) {
+        SnapshotBodies.invalidateScope(metaDir(ns, t))
+        BlobMetaStore.evictUnder(metaDir(ns, t))
+        blobs.deleteTree(metaDir(ns, t))
+        Seq(dataDir(ns, t), tableDir(ns, t)).foreach { d =>
+          if (blobs.list(d).isEmpty) blobs.delete(d)
+        }
+      }
+      dropped
+    } finally blobs.delete(claim)
   }
 
   def renameTable(fromNs: Seq[String], from: String,
@@ -280,6 +296,18 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
 }
 
 object BlobMetaStore {
+  /** The directory name of a namespace level or table name. */
+  private def segment(name: String): String = name match {
+    case "." => "%2E"
+    case ".." => "%2E%2E"
+    case _ => name.replace("%", "%25").replace("/", "%2F")
+  }
+
+  /** The name a directory stands for; every '%' in a directory `segment`
+    * wrote starts one of its three escapes. */
+  private def name(segment: String): String =
+    segment.replace("%2F", "/").replace("%2E", ".").replace("%25", "%")
+
   private final class Version(val bytes: Array[Byte], val meta: TableMetadata)
 
   // version-document key → its bytes and the metadata inflated from them,

@@ -1,10 +1,11 @@
 package graft.meta
 
-import java.net.URLEncoder
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+
+import org.apache.spark.sql.connector.catalog.Identifier
 
 import graft.commit._
 
@@ -22,6 +23,9 @@ import graft.commit._
   * (version, document) CAS is intentionally unsupported; the wire
   * protocol arbitrates one level down, exactly once.
   *
+  * Paths, request bodies and error responses are encoded and decoded by
+  * [[RestWire]], the module the serving side decodes them with.
+  *
   * The full surface round-trips: namespaces, tables, appends,
   * overwrites, schema evolution, rename, rollback, time travel
   * (`?version=N` on LoadTable) and partition-spec evolution.
@@ -31,15 +35,9 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
   private implicit val formats: Formats = DefaultFormats
   private val base = warehouse.stripSuffix("/")
   private val http = HttpClient.newHttpClient()
-  private val Unit31 = "\u001F"
-
-  /** Percent-encode one path segment. URLEncoder is form-encoding —
-    * its '+' for space would NOT decode back to a space in a URI path,
-    * so rewrite it; everything else ('/', '#', '?', '%') is covered. */
-  private def seg(s: String): String =
-    URLEncoder.encode(s, "UTF-8").replace("+", "%20")
-
-  private def enc(ns: Seq[String]): String = seg(ns.mkString(Unit31))
+  private def nsPath(ns: Seq[String]): String = s"/v1/namespaces/${RestWire.segment(ns)}"
+  private def tablePath(ns: Seq[String], t: String): String =
+    s"${nsPath(ns)}/tables/${RestWire.segment(t)}"
 
   private case class Resp(code: Int, body: String) {
     def json: JValue = JsonMethods.parse(body)
@@ -56,22 +54,8 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
     Resp(r.statusCode(), r.body())
   }
 
-  /** Map the wire error envelope back onto the exception vocabulary the
-    * catalog layer translates (same classes the local stores throw). */
-  private def fail(r: Resp, ns: Seq[String], t: Option[String]): Nothing = {
-    val tpe = try (r.json \ "error" \ "type").extractOpt[String].getOrElse("")
-    catch { case _: Exception => "" }
-    val msg = try (r.json \ "error" \ "message").extractOpt[String].getOrElse(r.body)
-    catch { case _: Exception => r.body }
-    (r.code, tpe) match {
-      case (404, "NoSuchTableException") => throw noSuchTable(ns, t.getOrElse(""))
-      case (404, _) => throw noSuchNamespace(ns)
-      case (409, "CommitFailedException") => throw new CommitFailedException(msg)
-      case (409, _) => throw new IllegalStateException(msg)
-      case (422, _) => throw new IllegalArgumentException(msg)
-      case _ => throw new java.io.IOException(s"HTTP ${r.code}: $msg")
-    }
-  }
+  private def fail(r: Resp, ns: Seq[String], t: Option[String]): Nothing =
+    throw RestWire.failure(r.code, r.body, ns, t)
 
   private def expect(r: Resp, codes: Set[Int], ns: Seq[String],
                      t: Option[String] = None): Resp =
@@ -80,40 +64,35 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
   // ---- namespaces -------------------------------------------------------
 
   def namespaceExists(ns: Seq[String]): Boolean =
-    ns.nonEmpty && call("HEAD", s"/v1/namespaces/${enc(ns)}").code == 204
+    ns.nonEmpty && call("HEAD", nsPath(ns)).code == 204
 
   def createNamespace(ns: Seq[String], props: Map[String, String]): Unit = {
     require(ns.nonEmpty && ns.forall(_.nonEmpty), s"invalid namespace ${ns.mkString(".")}")
-    val r = call("POST", "/v1/namespaces", Some(JObject(
-      "namespace" -> JArray(ns.map(JString(_)).toList),
-      "properties" -> JObject(props.toList.map { case (k, v) => k -> (JString(v): JValue) }))))
-    if (r.code == 409) throw new IllegalStateException(s"namespace exists: ${ns.mkString(".")}")
-    expect(r, Set(200), ns); ()
+    expect(call("POST", "/v1/namespaces", Some(RestWire.Namespace(ns, props).json)), Set(200), ns)
+    ()
   }
 
-  def loadNamespace(ns: Seq[String]): Map[String, String] = {
-    val r = expect(call("GET", s"/v1/namespaces/${enc(ns)}"), Set(200), ns)
-    (r.json \ "properties").extractOpt[Map[String, String]].getOrElse(Map.empty)
-  }
+  def loadNamespace(ns: Seq[String]): Map[String, String] =
+    RestWire.Namespace.from(expect(call("GET", nsPath(ns)), Set(200), ns).json)
+      .properties
 
   def setNamespaceProperties(ns: Seq[String], props: Map[String, String]): Unit = {
     // the wire verb is updates+removals; replacement = update everything,
     // remove whatever the current document has that the new one lacks
     val removals = loadNamespace(ns).keySet -- props.keySet
-    val r = call("POST", s"/v1/namespaces/${enc(ns)}/properties", Some(JObject(
-      "removals" -> JArray(removals.toList.sorted.map(JString(_))),
-      "updates" -> JObject(props.toList.map { case (k, v) => k -> (JString(v): JValue) }))))
+    val r = call("POST", nsPath(ns) + "/properties",
+      Some(RestWire.UpdateNamespace(removals.toList.sorted, props).json))
     expect(r, Set(200), ns); ()
   }
 
   def listNamespaces(parent: Seq[String]): Seq[Seq[String]] = {
-    val q = if (parent.isEmpty) "" else s"?parent=${enc(parent)}"
+    val q = if (parent.isEmpty) "" else s"?parent=${RestWire.segment(parent)}"
     val r = expect(call("GET", s"/v1/namespaces$q"), Set(200), parent)
     (r.json \ "namespaces").extract[List[List[String]]].map(_.toSeq)
   }
 
   def dropNamespace(ns: Seq[String]): Boolean = {
-    val r = call("DELETE", s"/v1/namespaces/${enc(ns)}")
+    val r = call("DELETE", nsPath(ns))
     r.code match {
       case 204 => true
       case 404 => false
@@ -124,10 +103,10 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
   // ---- tables -----------------------------------------------------------
 
   def tableExists(ns: Seq[String], t: String): Boolean =
-    call("HEAD", s"/v1/namespaces/${enc(ns)}/tables/${seg(t)}").code == 204
+    call("HEAD", tablePath(ns, t)).code == 204
 
   def listTables(ns: Seq[String]): Seq[String] = {
-    val r = expect(call("GET", s"/v1/namespaces/${enc(ns)}/tables"), Set(200), ns)
+    val r = expect(call("GET", nsPath(ns) + "/tables"), Set(200), ns)
     (r.json \ "identifiers").extract[List[JValue]]
       .map(j => (j \ "name").extract[String]).sorted
   }
@@ -139,7 +118,7 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
   private def loadRaw(ns: Seq[String], t: String,
                       version: Option[Int] = None): (TableMetadata, Int, String) = {
     val q = version.map(v => s"?version=$v").getOrElse("")
-    val r = expect(call("GET", s"/v1/namespaces/${enc(ns)}/tables/${seg(t)}$q"),
+    val r = expect(call("GET", tablePath(ns, t) + q),
       Set(200), ns, Some(t))
     val loc = (r.json \ "metadata-location").extract[String]
     val v = loc match { case VersionRe(n) => n.toInt; case _ => 0 }
@@ -166,12 +145,8 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
   def createTable(ns: Seq[String], t: String, m: TableMetadata): Unit = {
     val schema = m.currentSchema
     val spec = m.specs.find(_.specId == m.defaultSpecId).getOrElse(PartitionSpecDef(0, Nil))
-    val r = call("POST", s"/v1/namespaces/${enc(ns)}/tables", Some(JObject(
-      "name" -> JString(t),
-      "schema" -> Extraction.decompose(schema)(TableMetadata.formats),
-      "partition-spec" -> Extraction.decompose(spec.fields)(TableMetadata.formats),
-      "properties" -> JObject(m.properties.toList.map { case (k, v) => k -> (JString(v): JValue) }))))
-    if (r.code == 409) throw new IllegalStateException(s"table exists: ${(ns :+ t).mkString(".")}")
+    val r = call("POST", nsPath(ns) + "/tables",
+      Some(RestWire.CreateTable(t, schema, spec.fields, m.properties).json))
     expect(r, Set(200), ns, Some(t)); ()
   }
 
@@ -185,121 +160,15 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
   override def commitOps(ns: Seq[String], table: String,
                          requirements: Seq[Requirement],
                          updates: Seq[MetadataUpdate]): TableMetadata = {
-    val r = call("POST", s"/v1/namespaces/${enc(ns)}/tables/${seg(table)}", Some(JObject(
-      "requirements" -> JArray(requirements.map(reqJson).toList),
-      "updates" -> JArray(updates.map(updateJson).toList))))
+    val r = call("POST", tablePath(ns, table),
+      Some(RestWire.Commit(requirements, updates).json))
     val ok = expect(r, Set(200), ns, Some(table))
     TableMetadata.fromJson(
       JsonMethods.compact(JsonMethods.render(ok.json \ "metadata")))
   }
 
-  private def reqJson(q: Requirement): JValue = q match {
-    case Requirement.AssertCurrentSchemaId(id) => JObject(
-      "type" -> JString("assert-current-schema-id"), "current-schema-id" -> JInt(id))
-    case Requirement.AssertTableUuid(u) => JObject(
-      "type" -> JString("assert-table-uuid"), "uuid" -> JString(u))
-    case Requirement.AssertDefaultSpecId(id) => JObject(
-      "type" -> JString("assert-default-spec-id"), "default-spec-id" -> JInt(id))
-    case Requirement.AssertCurrentSnapshotId(id) =>
-      val fields: List[(String, JValue)] =
-        List("type" -> JString("assert-current-snapshot-id")) ++
-          id.map(i => "snapshot-id" -> (JInt(i): JValue))
-      JObject(fields)
-    case Requirement.AssertMaxSummaryBelow(k, v) => JObject(
-      "type" -> JString("assert-max-summary-below"),
-      "key" -> JString(k), "value" -> JInt(v))
-    case Requirement.AssertCreate => JObject("type" -> JString("assert-create"))
-  }
-
-  private def statsJson(stats: Map[String, List[ColStatDef]]): JValue =
-    Extraction.decompose(stats)(TableMetadata.formats)
-
-  private def updateJson(u: MetadataUpdate): JValue = u match {
-    case MetadataUpdate.AddSchema(s) => JObject(
-      "action" -> JString("add-schema"),
-      "schema" -> Extraction.decompose(s)(TableMetadata.formats))
-    case MetadataUpdate.SetCurrentSchema(id) => JObject(
-      "action" -> JString("set-current-schema"), "schema-id" -> JInt(id))
-    case MetadataUpdate.SetProperties(p) => JObject(
-      "action" -> JString("set-properties"),
-      "updates" -> JObject(p.toList.map { case (k, v) => k -> (JString(v): JValue) }))
-    case MetadataUpdate.RemoveProperties(ks) => JObject(
-      "action" -> JString("remove-properties"),
-      "removals" -> JArray(ks.map(JString(_)).toList))
-    case MetadataUpdate.SetLocation(l) => JObject(
-      "action" -> JString("set-location"), "location" -> JString(l))
-    case MetadataUpdate.AddSnapshot(s) => JObject(
-      "action" -> JString("add-snapshot"),
-      "snapshot" -> Extraction.decompose(s)(TableMetadata.formats))
-    case MetadataUpdate.SetCurrentSnapshot(id) => JObject(
-      "action" -> JString("set-current-snapshot"), "snapshot-id" -> JInt(id))
-    case MetadataUpdate.OverwritePartitions(files, pvs, ts, stats, extra) => JObject(
-      "action" -> JString("overwrite-partitions"),
-      "files" -> JArray(files.map(JString(_))),
-      "partition-values" -> Extraction.decompose(pvs)(TableMetadata.formats),
-      "timestamp-ms" -> JInt(ts),
-      "file-stats" -> statsJson(stats),
-      "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
-    case MetadataUpdate.AddPartitionSpec(spec) => JObject(
-      "action" -> JString("add-partition-spec"),
-      "spec" -> Extraction.decompose(spec)(TableMetadata.formats))
-    case MetadataUpdate.AppendFiles(files, ts, stats, extra) => JObject(
-      "action" -> JString("append-files"),
-      "files" -> JArray(files.map(JString(_))),
-      "timestamp-ms" -> JInt(ts),
-      "file-stats" -> statsJson(stats),
-      "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
-    case MetadataUpdate.ReplaceFiles(files, ts, stats, extra) => JObject(
-      "action" -> JString("replace-files"),
-      "files" -> JArray(files.map(JString(_))),
-      "timestamp-ms" -> JInt(ts),
-      "file-stats" -> statsJson(stats),
-      "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
-    case MetadataUpdate.RewriteFiles(removed, added, ts, stats, extra) => JObject(
-      "action" -> JString("rewrite-files"),
-      "removed-files" -> JArray(removed.map(JString(_))),
-      "added-files" -> JArray(added.map(JString(_))),
-      "timestamp-ms" -> JInt(ts),
-      "file-stats" -> statsJson(stats),
-      "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
-    case MetadataUpdate.SetRef(name, sid, refType) => JObject(
-      "action" -> JString("set-ref"), "ref-name" -> JString(name),
-      "snapshot-id" -> JInt(sid), "ref-type" -> JString(refType))
-    case MetadataUpdate.RemoveRef(name) => JObject(
-      "action" -> JString("remove-ref"), "ref-name" -> JString(name))
-    case MetadataUpdate.RemoveSnapshots(ids) => JObject(
-      "action" -> JString("remove-snapshots"),
-      "snapshot-ids" -> JArray(ids.toList.map(id => JInt(id): JValue)))
-    case MetadataUpdate.FastForward(name) => JObject(
-      "action" -> JString("fast-forward"), "ref-name" -> JString(name))
-    case MetadataUpdate.AppendFilesToRef(ref, files, ts, stats, extra) => JObject(
-      "action" -> JString("append-files-to-ref"),
-      "ref-name" -> JString(ref),
-      "files" -> JArray(files.map(JString(_))),
-      "timestamp-ms" -> JInt(ts),
-      "file-stats" -> statsJson(stats),
-      "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
-    case MetadataUpdate.RowDelta(added, deletes, ts, stats, extra) => JObject(
-      "action" -> JString("row-delta"),
-      "added-files" -> JArray(added.map(JString(_))),
-      "added-delete-files" ->
-        Extraction.decompose(deletes)(TableMetadata.formats),
-      "timestamp-ms" -> JInt(ts),
-      "file-stats" -> statsJson(stats),
-      "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
-    case MetadataUpdate.RewriteDeletes(removed, added, ts, extra) => JObject(
-      "action" -> JString("rewrite-deletes"),
-      "removed-delete-files" -> JArray(removed.map(JString(_))),
-      "added-delete-files" ->
-        Extraction.decompose(added)(TableMetadata.formats),
-      "timestamp-ms" -> JInt(ts),
-      "summary" -> JObject(extra.toList.map { case (k, v) => k -> (JString(v): JValue) }))
-    case other => throw new UnsupportedOperationException(
-      s"update $other has no wire encoding")
-  }
-
   def dropTable(ns: Seq[String], t: String): Boolean = {
-    val r = call("DELETE", s"/v1/namespaces/${enc(ns)}/tables/${seg(t)}")
+    val r = call("DELETE", tablePath(ns, t))
     r.code match {
       case 204 => true
       case 404 => false
@@ -309,25 +178,22 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
 
   def renameTable(fromNs: Seq[String], from: String,
                   toNs: Seq[String], to: String): Unit = {
-    val r = call("POST", "/v1/tables/rename", Some(JObject(
-      "source" -> JObject("namespace" -> JArray(fromNs.map(JString(_)).toList),
-        "name" -> JString(from)),
-      "destination" -> JObject("namespace" -> JArray(toNs.map(JString(_)).toList),
-        "name" -> JString(to)))))
+    val r = call("POST", "/v1/tables/rename", Some(RestWire.Rename(
+      Identifier.of(fromNs.toArray, from), Identifier.of(toNs.toArray, to)).json))
     expect(r, Set(200), fromNs, Some(from))
     // the moved table's data dir changed with it
-    dataDirCache.remove((fromNs :+ from).mkString(Unit31))
-    dataDirCache.remove((toNs :+ to).mkString(Unit31))
+    dataDirCache.remove(fromNs :+ from)
+    dataDirCache.remove(toNs :+ to)
     ()
   }
 
   /** The backing catalog's data location for the table — shared storage
     * both sides can reach. Memoized: locations are fixed at create. */
   private val dataDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    new java.util.concurrent.ConcurrentHashMap[Seq[String], String]()
 
   def dataDir(ns: Seq[String], t: String): String = {
-    val key = (ns :+ t).mkString(Unit31)
+    val key = ns :+ t
     Option(dataDirCache.get(key)).getOrElse {
       val loc = try load(ns, t)._1.location
       catch { case _: Exception =>
@@ -357,10 +223,4 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
   def fileSizeBytes(abs: String): Option[Long] = phys(abs).fileSizeBytes(abs)
   override def importFile(srcAbs: String, destAbs: String): Unit =
     phys(destAbs).importFile(srcAbs, destAbs)
-
-  private def noSuchNamespace(ns: Seq[String]) =
-    new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(ns.toArray)
-  private def noSuchTable(ns: Seq[String], t: String) =
-    new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
-      org.apache.spark.sql.connector.catalog.Identifier.of(ns.toArray, t))
 }

@@ -8,11 +8,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.Identifier
 
 import graft.catalog.GraftCatalog
-import graft.commit._
 import graft.meta._
 
 /** Wire-level facade re-exposing [[GraftCatalog]] as the reference's REST
@@ -29,12 +28,12 @@ import graft.meta._
   *   - rename responds bare 200 with no body (`tables.go:376,401`)
   *   - commit body's identifier ignored; URL params win (`tables.go:153-171`)
   *   - error envelope `{error:{message,type,code}}` (`errors.go:5-13`)
+  *
+  * Paths, request bodies and error shapes are decoded by [[RestWire]],
+  * which the federation client encodes them with.
   */
 final class RestServer(catalog: GraftCatalog, port: Int = 0,
                        host: String = "127.0.0.1") {
-  private implicit val formats: Formats = DefaultFormats
-  private val Unit31 = "\u001f"
-
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
   server.createContext("/", handle _)
   // concurrent request handling (gin serves per-goroutine; handlers are
@@ -89,7 +88,7 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     try {
       // split before decoding, so an encoded '/' stays inside its name
       val segs = ex.getRequestURI.getRawPath.split("/").filter(_.nonEmpty)
-        .map(decodeSegment).toList
+        .map(RestWire.decodeSegment).toList
       (method, segs) match {
         case ("OPTIONS", _) => empty(ex, 204) // CORS preflight
         case ("GET", List("health")) => json(ex, 200, JObject("status" -> JString("ok")))
@@ -111,28 +110,9 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
         case _ => error(ex, 404, "NoSuchEndpointException", s"no route: $method $path")
       }
     } catch {
-      case e: NoSuchNamespaceException =>
-        error(ex, 404, "NoSuchNamespaceException", e.getMessage)
-      case e: NoSuchTableException =>
-        error(ex, 404, "NoSuchTableException", e.getMessage)
-      case e: org.apache.spark.sql.catalyst.analysis.NamespaceAlreadyExistsException =>
-        error(ex, 409, "AlreadyExistsException", e.getMessage)
-      case e: org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException =>
-        error(ex, 409, "AlreadyExistsException", e.getMessage)
-      case e: org.apache.spark.sql.catalyst.analysis.NonEmptyNamespaceException =>
-        error(ex, 409, "NamespaceNotEmptyException", e.getMessage)
-      case e: CommitFailedException =>
-        error(ex, 409, "CommitFailedException", e.getMessage)
-      case e: IllegalArgumentException =>
-        error(ex, 422, "UnprocessableEntityException", e.getMessage)
-      // malformed/unmappable request body → 400, like the reference's
-      // ShouldBindJSON failure path (`tables.go:163-169`)
-      case e: org.json4s.MappingException =>
-        error(ex, 400, "BadRequestException", String.valueOf(e.getMessage))
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        error(ex, 400, "BadRequestException", String.valueOf(e.getMessage))
       case e: Exception =>
-        error(ex, 500, "InternalServerError", String.valueOf(e.getMessage))
+        val (code, tpe) = RestWire.status(e)
+        error(ex, code, tpe, String.valueOf(e.getMessage))
     } finally {
       // hundredths of a millisecond, rounded half up
       val centiMs = (System.nanoTime() - t0 + 5000) / 10000
@@ -154,13 +134,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     }
   }
 
-  /** Percent-decode one raw path segment. In a path '+' is a plus sign,
-    * not the space form decoding makes of it. */
-  private def decodeSegment(raw: String): String =
-    java.net.URLDecoder.decode(raw.replace("+", "%2B"), UTF_8)
-
   /** A namespace path segment; `handle` has already decoded it. */
-  private def ns(seg: String): Array[String] = seg.split(Unit31, -1)
+  private def ns(seg: String): Seq[String] = RestWire.levels(seg)
 
   private def query(ex: HttpExchange): Map[String, String] = {
     def dec(s: String) = java.net.URLDecoder.decode(s, UTF_8)
@@ -253,8 +228,7 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     ex.sendResponseHeaders(code, -1)
 
   private def error(ex: HttpExchange, code: Int, tpe: String, msg: String): Unit =
-    json(ex, code, JObject("error" -> JObject(
-      "message" -> JString(msg), "type" -> JString(tpe), "code" -> JInt(code))))
+    json(ex, code, RestWire.error(code, tpe, msg))
 
   // ---- handlers ---------------------------------------------------------
 
@@ -265,7 +239,7 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
       "overrides" -> toJObj(catalog.configOverrides)))
 
   private def listNamespaces(ex: HttpExchange): Unit = {
-    val parent = query(ex).get("parent").map(p => p.split(Unit31, -1).toSeq).getOrElse(Nil)
+    val parent = query(ex).get("parent").map(RestWire.levels).getOrElse(Nil)
     // pageToken/pageSize accepted but ignored; NextPageToken never set
     val result = catalog.metadataStore.listNamespaces(parent)
     json(ex, 200, JObject("namespaces" ->
@@ -273,37 +247,29 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
   }
 
   private def createNamespace(ex: HttpExchange): Unit = {
-    val b = body(ex)
-    val namespace = (b \ "namespace").extract[List[String]]
-    val props = (b \ "properties").extractOpt[Map[String, String]].getOrElse(Map.empty)
-    catalog.createNamespace(namespace.toArray,
-      scala.jdk.CollectionConverters.MapHasAsJava(props).asJava)
-    json(ex, 200, JObject("namespace" -> JArray(namespace.map(JString(_))),
-      "properties" -> toJObj(props)))
+    val c = RestWire.Namespace.from(body(ex))
+    catalog.createNamespace(c.namespace.toArray,
+      scala.jdk.CollectionConverters.MapHasAsJava(c.properties).asJava)
+    json(ex, 200, c.json)
   }
 
-  private def loadNamespace(ex: HttpExchange, seg: String): Unit = {
-    val n = ns(seg)
-    val props = catalog.metadataStore.loadNamespace(n.toSeq)
-    json(ex, 200, JObject("namespace" -> JArray(n.map(JString(_)).toList),
-      "properties" -> toJObj(props)))
-  }
+  private def loadNamespace(ex: HttpExchange, seg: String): Unit =
+    json(ex, 200, RestWire.Namespace(ns(seg),
+      catalog.metadataStore.loadNamespace(ns(seg))).json)
 
   private def headNamespace(ex: HttpExchange, seg: String): Unit =
-    if (catalog.namespaceExists(ns(seg))) empty(ex, 204)
-    else error(ex, 404, "NoSuchNamespaceException", s"namespace ${ns(seg).mkString(".")}")
+    if (catalog.metadataStore.namespaceExists(ns(seg))) empty(ex, 204)
+    else throw new NoSuchNamespaceException(ns(seg).toArray)
 
   private def dropNamespace(ex: HttpExchange, seg: String): Unit = {
-    catalog.dropNamespace(ns(seg), cascade = false)
+    catalog.dropNamespace(ns(seg).toArray, cascade = false)
     empty(ex, 204)
   }
 
   private def updateNamespaceProps(ex: HttpExchange, seg: String): Unit = {
-    val b = body(ex)
-    val removals = (b \ "removals").extractOpt[List[String]].getOrElse(Nil)
-    val updates = (b \ "updates").extractOpt[Map[String, String]].getOrElse(Map.empty)
+    val u = RestWire.UpdateNamespace.from(body(ex))
     val (updated, removed, missing) =
-      catalog.updateNamespaceProperties(ns(seg).toSeq, removals, updates)
+      catalog.updateNamespaceProperties(ns(seg), u.removals, u.updates)
     json(ex, 200, JObject(
       "updated" -> JArray(updated.map(JString(_)).toList),
       "removed" -> JArray(removed.map(JString(_)).toList),
@@ -311,47 +277,35 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
   }
 
   private def listTables(ex: HttpExchange, seg: String): Unit = {
-    val idents = catalog.listTables(ns(seg))
+    val idents = catalog.listTables(ns(seg).toArray)
     json(ex, 200, JObject("identifiers" -> JArray(idents.map { id =>
       JObject("namespace" -> JArray(id.namespace.map(JString(_)).toList),
         "name" -> JString(id.name))
     }.toList)))
   }
 
-  private def schemaFromJson(j: JValue): SchemaDef =
-    SchemaDef((j \ "schemaId").extractOpt[Int].getOrElse(0),
-      (j \ "fields").extract[List[FieldDef]])
-
   private def createTable(ex: HttpExchange, seg: String): Unit = {
     val n = ns(seg)
     val b = body(ex)
-    if ((b \ "stage-create").extractOpt[Boolean].contains(true)) {
+    if (RestWire.CreateTable.staged(b)) {
       error(ex, 501, "NotImplementedException", "stage-create is not supported")
       return
     }
-    val name = (b \ "name").extract[String]
-    val schema = schemaFromJson(b \ "schema")
-    val props = (b \ "properties").extractOpt[Map[String, String]].getOrElse(Map.empty)
-    val specFields = (b \ "partition-spec").extractOpt[List[PartitionFieldDef]].getOrElse(Nil)
-    if (!catalog.metadataStore.namespaceExists(n.toSeq))
-      throw new NoSuchNamespaceException(n)
-    if (catalog.metadataStore.tableExists(n.toSeq, name))
-      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
-        Identifier.of(n, name))
+    val c = RestWire.CreateTable.from(b)
     val meta = TableMetadata.empty(
       uuid = java.util.UUID.randomUUID().toString,
-      location = catalog.metadataStore.dataDir(n.toSeq, name),
-      schema = schema.copy(schemaId = 0),
-      spec = PartitionSpecDef(0, specFields),
+      location = catalog.metadataStore.dataDir(n, c.name),
+      schema = c.schema.copy(schemaId = 0),
+      spec = PartitionSpecDef(0, c.spec),
       order = SortOrderDef(0, Nil),
-      props = catalog.configDefaults ++ props)
-    // a create that lost a race to another one is a 409 like the check above
-    try catalog.metadataStore.createTable(n.toSeq, name, meta)
+      props = catalog.configDefaults ++ c.properties)
+    // the store checks the namespace (404) and decides the race between
+    // creates of one name: the losers' "exists" is a 409
+    try catalog.metadataStore.createTable(n, c.name, meta)
     catch { case _: IllegalStateException =>
-      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
-        Identifier.of(n, name))
+      throw new TableAlreadyExistsException(Identifier.of(n.toArray, c.name))
     }
-    respondLoadTable(ex, n.toSeq, name)
+    respondLoadTable(ex, n, c.name)
   }
 
   private def respondLoadTable(ex: HttpExchange, n: Seq[String], t: String,
@@ -366,33 +320,31 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
   }
 
   private def loadTable(ex: HttpExchange, seg: String, t: String): Unit =
-    respondLoadTable(ex, ns(seg).toSeq, t,
+    respondLoadTable(ex, ns(seg), t,
       query(ex).get("version").map(_.toInt))
 
   private def headTable(ex: HttpExchange, seg: String, t: String): Unit =
-    if (catalog.metadataStore.tableExists(ns(seg).toSeq, t)) empty(ex, 204)
-    else error(ex, 404, "NoSuchTableException", s"table $t")
+    if (catalog.metadataStore.tableExists(ns(seg), t)) empty(ex, 204)
+    else throw new NoSuchTableException(Identifier.of(ns(seg).toArray, t))
 
   /** DELETE with purgeRequested=true → HTTP 400 carrying a 501-code body,
-    * preserving the reference's status/body mismatch (`tables.go:288-295`). */
+    * preserving the reference's status/body mismatch (`tables.go:288-295`).
+    * Of racing drops, the one the store lets win answers 204. */
   private def dropTable(ex: HttpExchange, seg: String, t: String): Unit = {
     if (query(ex).get("purgeRequested").contains("true")) {
       error(ex, 400, "NotImplementedException", "purge is not supported")
       return
     }
-    if (!catalog.metadataStore.tableExists(ns(seg).toSeq, t))
-      throw new NoSuchTableException(Identifier.of(ns(seg), t))
-    catalog.metadataStore.dropTable(ns(seg).toSeq, t)
+    if (!catalog.metadataStore.dropTable(ns(seg), t))
+      throw new NoSuchTableException(Identifier.of(ns(seg).toArray, t))
     empty(ex, 204)
   }
 
   /** POST commit — body identifier ignored, URL params win (`tables.go:171`). */
   private def updateTable(ex: HttpExchange, seg: String, t: String): Unit = {
-    val b = body(ex)
-    val reqs = (b \ "requirements").extractOpt[List[JValue]].getOrElse(Nil).map(parseReq)
-    val ups = (b \ "updates").extractOpt[List[JValue]].getOrElse(Nil).map(parseUpdate)
-    catalog.commit(Identifier.of(ns(seg), t), reqs, ups)
-    val n = ns(seg).toSeq
+    val c = RestWire.Commit.from(body(ex))
+    val n = ns(seg)
+    catalog.commit(Identifier.of(n.toArray, t), c.requirements, c.updates)
     val (m, v) = catalog.metadataStore.load(n, t)
     // `{metadata-location, metadata}`: the next load's body up to its
     // config member, so the new version is rendered once for both
@@ -402,109 +354,10 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
     send(ex, 200, buf)
   }
 
-  private def parseReq(j: JValue): Requirement = (j \ "type").extract[String] match {
-    case "assert-current-schema-id" =>
-      Requirement.AssertCurrentSchemaId((j \ "current-schema-id").extract[Int])
-    case "assert-table-uuid" =>
-      Requirement.AssertTableUuid((j \ "uuid").extract[String])
-    case "assert-default-spec-id" =>
-      Requirement.AssertDefaultSpecId((j \ "default-spec-id").extract[Int])
-    case "assert-current-snapshot-id" =>
-      Requirement.AssertCurrentSnapshotId((j \ "snapshot-id").extractOpt[Long])
-    case "assert-max-summary-below" =>
-      Requirement.AssertMaxSummaryBelow(
-        (j \ "key").extract[String], (j \ "value").extract[Long])
-    case other => throw new IllegalArgumentException(s"unknown requirement $other")
-  }
-
-  private def parseUpdate(j: JValue): MetadataUpdate = (j \ "action").extract[String] match {
-    case "add-schema" => MetadataUpdate.AddSchema(schemaFromJson(j \ "schema"))
-    case "set-current-schema" =>
-      MetadataUpdate.SetCurrentSchema((j \ "schema-id").extract[Int])
-    case "set-properties" =>
-      MetadataUpdate.SetProperties((j \ "updates").extract[Map[String, String]])
-    case "remove-properties" =>
-      MetadataUpdate.RemoveProperties((j \ "removals").extract[List[String]])
-    case "set-location" =>
-      MetadataUpdate.SetLocation((j \ "location").extract[String])
-    // data-plane commits over the wire (the reference forwards the full
-    // iceberg-go update set to CommitTable; these are the snapshot-level
-    // members our commit algebra supports)
-    case "add-snapshot" =>
-      MetadataUpdate.AddSnapshot((j \ "snapshot").extract[SnapshotDef])
-    case "set-current-snapshot" =>
-      MetadataUpdate.SetCurrentSnapshot((j \ "snapshot-id").extract[Long])
-    case "add-partition-spec" =>
-      MetadataUpdate.AddPartitionSpec((j \ "spec").extract[PartitionSpecDef])
-    // optional per-file stats so manifest min/max skipping survives a
-    // delegated commit (absent on reference-shaped bodies — additive)
-    case "append-files" =>
-      MetadataUpdate.AppendFiles(
-        (j \ "files").extract[List[String]],
-        (j \ "timestamp-ms").extractOpt[Long].getOrElse(System.currentTimeMillis()),
-        (j \ "file-stats").extractOpt[Map[String, List[ColStatDef]]].getOrElse(Map.empty),
-        (j \ "summary").extractOpt[Map[String, String]].getOrElse(Map.empty))
-    case "replace-files" =>
-      MetadataUpdate.ReplaceFiles(
-        (j \ "files").extract[List[String]],
-        (j \ "timestamp-ms").extractOpt[Long].getOrElse(System.currentTimeMillis()),
-        (j \ "file-stats").extractOpt[Map[String, List[ColStatDef]]].getOrElse(Map.empty),
-        (j \ "summary").extractOpt[Map[String, String]].getOrElse(Map.empty))
-    case "overwrite-partitions" =>
-      MetadataUpdate.OverwritePartitions(
-        (j \ "files").extract[List[String]],
-        (j \ "partition-values").extract[List[Map[String, String]]],
-        (j \ "timestamp-ms").extractOpt[Long].getOrElse(System.currentTimeMillis()),
-        (j \ "file-stats").extractOpt[Map[String, List[ColStatDef]]].getOrElse(Map.empty),
-        (j \ "summary").extractOpt[Map[String, String]].getOrElse(Map.empty))
-    case "rewrite-files" =>
-      MetadataUpdate.RewriteFiles(
-        (j \ "removed-files").extract[List[String]],
-        (j \ "added-files").extract[List[String]],
-        (j \ "timestamp-ms").extractOpt[Long].getOrElse(System.currentTimeMillis()),
-        (j \ "file-stats").extractOpt[Map[String, List[ColStatDef]]].getOrElse(Map.empty),
-        (j \ "summary").extractOpt[Map[String, String]].getOrElse(Map.empty))
-    case "set-ref" =>
-      MetadataUpdate.SetRef((j \ "ref-name").extract[String],
-        (j \ "snapshot-id").extract[Long], (j \ "ref-type").extract[String])
-    case "remove-ref" =>
-      MetadataUpdate.RemoveRef((j \ "ref-name").extract[String])
-    case "remove-snapshots" =>
-      MetadataUpdate.RemoveSnapshots((j \ "snapshot-ids").extract[List[Long]])
-    case "fast-forward" =>
-      MetadataUpdate.FastForward((j \ "ref-name").extract[String])
-    case "append-files-to-ref" =>
-      MetadataUpdate.AppendFilesToRef(
-        (j \ "ref-name").extract[String],
-        (j \ "files").extract[List[String]],
-        (j \ "timestamp-ms").extractOpt[Long].getOrElse(System.currentTimeMillis()),
-        (j \ "file-stats").extractOpt[Map[String, List[ColStatDef]]].getOrElse(Map.empty),
-        (j \ "summary").extractOpt[Map[String, String]].getOrElse(Map.empty))
-    case "row-delta" =>
-      MetadataUpdate.RowDelta(
-        (j \ "added-files").extract[List[String]],
-        (j \ "added-delete-files").extract[List[DeleteFileDef]],
-        (j \ "timestamp-ms").extractOpt[Long].getOrElse(System.currentTimeMillis()),
-        (j \ "file-stats").extractOpt[Map[String, List[ColStatDef]]].getOrElse(Map.empty),
-        (j \ "summary").extractOpt[Map[String, String]].getOrElse(Map.empty))
-    case "rewrite-deletes" =>
-      MetadataUpdate.RewriteDeletes(
-        (j \ "removed-delete-files").extract[List[String]],
-        (j \ "added-delete-files").extract[List[DeleteFileDef]],
-        (j \ "timestamp-ms").extractOpt[Long].getOrElse(System.currentTimeMillis()),
-        (j \ "summary").extractOpt[Map[String, String]].getOrElse(Map.empty))
-    case other => throw new IllegalArgumentException(s"unknown update $other")
-  }
-
   /** POST /v1/tables/rename — discards the result, bare 200 no body. */
   private def renameTable(ex: HttpExchange): Unit = {
-    val b = body(ex)
-    val srcNs = (b \ "source" \ "namespace").extract[List[String]]
-    val srcName = (b \ "source" \ "name").extract[String]
-    val dstNs = (b \ "destination" \ "namespace").extract[List[String]]
-    val dstName = (b \ "destination" \ "name").extract[String]
-    catalog.renameTable(Identifier.of(srcNs.toArray, srcName),
-      Identifier.of(dstNs.toArray, dstName))
+    val r = RestWire.Rename.from(body(ex))
+    catalog.renameTable(r.from, r.to)
     empty(ex, 200)
   }
 

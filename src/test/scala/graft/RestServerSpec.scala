@@ -587,4 +587,22 @@ class RestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.properties.get("slash.key").contains("v"))
     assert(store.load(Seq("slash/ns"), "t/1")._2 == 2)
   }
+
+  test("racing drops of one table: one 204, the rest 404") {
+    req("POST", "/v1/namespaces", """{"namespace":["drop_race"]}""")
+    (0 until 5).foreach { round =>
+      val created = req("POST", "/v1/namespaces/drop_race/tables",
+        s"""{"name":"t","schema":$tableSchema}""")
+      assert(created.statusCode() == 200, created.body())
+      val n = 8
+      val gate = new java.util.concurrent.CyclicBarrier(n)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+      val codes = try (0 until n).map(_ => pool.submit(new java.util.concurrent.Callable[Int] {
+        def call(): Int = { gate.await(); req("DELETE", "/v1/namespaces/drop_race/tables/t").statusCode() }
+      })).map(_.get())
+      finally pool.shutdown()
+      assert(codes.count(_ == 204) == 1 && codes.count(_ == 404) == n - 1, s"round $round: $codes")
+      assert(req("HEAD", "/v1/namespaces/drop_race/tables/t").statusCode() == 404)
+    }
+  }
 }
