@@ -80,21 +80,35 @@ trait CasBlobStore {
   * once created and created with [[CasBlobStore.putIfAbsent]] — two
   * drivers racing to commit version N+1 (or to create v1, or the same
   * namespace) cannot both win, because exactly one create-if-absent
-  * succeeds. That single primitive is the whole CAS; readers list
-  * versions and take the max.
+  * succeeds. That single primitive is the whole CAS.
   *
-  * Version cache: a load lists `metadata/` and reads the slim version
-  * document (a few KB) every time, but parses and inflates it only when
-  * the process-wide cache holds no metadata inflated from exactly those
-  * bytes under that key. Comparing bytes, not trusting the path, means a
-  * table dropped and recreated by another process never serves stale
-  * metadata. A won commit caches the version it wrote, inflated from the
-  * bodies [[SnapshotBodies.persist]] just cached, so the load after a
-  * commit parses nothing heavy; drop and rename evict the table's
-  * entries. Repeated loads of an unchanged version return the same
-  * instance, which lets the REST server reuse the response it rendered
-  * for it. Bounds: 128 versions in access order; each pins its snapshot
-  * bodies, besides [[SnapshotBodies]]' own 512-body LRU.
+  * Current version: a table's versions form one contiguous range that
+  * grows only at the top — a commit creates N+1, and snapshot expiry
+  * deletes versions below its cutoff in ascending order and always keeps
+  * the newest. So a reader starts from the newest version this process
+  * has seen for the table and probes forward (`contains(v+1)`) until a
+  * version is absent, then checks that the one it stopped at is still
+  * there: an expiry racing the probe cannot delete a version while an
+  * older one remains, so a present stop is the newest at the moment the
+  * probe missed. It lists `metadata/` only when the process knows no
+  * version for the table or the known one is gone (dropped, expired, or
+  * the table recreated with fewer versions). A stale hint costs probes or
+  * one listing, never a wrong answer. Listings, probes and won commits
+  * update the hint; drop and rename evict it.
+  *
+  * Version cache: a load reads the slim version document (a few KB)
+  * every time, but parses and inflates it only when the process-wide
+  * cache holds no metadata inflated from exactly those bytes under that
+  * key. Comparing bytes, not trusting the path, means a table dropped and
+  * recreated by another process never serves stale metadata. A won commit
+  * caches the slim document it wrote, inflated from the bodies
+  * [[SnapshotBodies.persist]] just cached, without parsing its bytes back
+  * (it is what they parse to: `MetaJsonPropertySpec`), so the load after
+  * a commit parses nothing; drop and rename evict the table's entries.
+  * Repeated loads of an unchanged version return the same instance, which
+  * lets the REST server reuse the response it rendered for it. Bounds:
+  * 128 versions in access order; each pins its snapshot bodies, besides
+  * [[SnapshotBodies]]' own 512-body LRU.
   */
 class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
 
@@ -163,13 +177,29 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
     blobs.list(nsDir(ns)).map(BlobMetaStore.name).filter(t => blobs.contains(metaDir(ns, t))).sorted
   }
 
-  /** One non-recursive listing of `metadata/`; temp names never match. */
-  def currentVersion(ns: Seq[String], t: String): Int =
-    blobs.list(metaDir(ns, t)).collect { case VersionRe(v) => v.toInt }
-      .maxOption.getOrElse(0)
+  def currentVersion(ns: Seq[String], t: String): Int = newest(metaDir(ns, t))
+
+  /** The newest version in the metadata directory `md`, 0 when there is
+    * none: a forward probe from the version this process saw last, or one
+    * listing when it saw none or that one is gone (see the class doc). */
+  private def newest(md: String): Int = {
+    def present(v: Int) = blobs.contains(versionKey(md, v))
+    val from = BlobMetaStore.seen(md)
+    var v = from
+    if (v > 0) {
+      while (present(v + 1)) v += 1
+      if (!present(v)) v = 0
+    }
+    // one non-recursive listing; temp names never match
+    if (v == 0) v = blobs.list(md).collect { case VersionRe(n) => n.toInt }.maxOption.getOrElse(0)
+    if (v > 0 && v != from) BlobMetaStore.see(md, v)
+    v
+  }
+
+  private def versionKey(md: String, v: Int): String = blobs.resolve(md, s"v$v.metadata.json")
 
   def metadataLocation(ns: Seq[String], t: String, version: Int): String =
-    blobs.resolve(metaDir(ns, t), s"v$version.metadata.json")
+    versionKey(metaDir(ns, t), version)
 
   def load(ns: Seq[String], t: String): (TableMetadata, Int) = {
     val v = currentVersion(ns, t)
@@ -182,13 +212,15 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
   def loadVersion(ns: Seq[String], t: String, v: Int): TableMetadata = {
     val key = metadataLocation(ns, t, v)
     val bytes = blobs.get(key).getOrElse(throw noSuchTable(ns, t))
-    BlobMetaStore.cached(key, bytes).getOrElse(inflate(metaDir(ns, t), key, bytes))
+    BlobMetaStore.cached(key, bytes).getOrElse(
+      inflate(metaDir(ns, t), key, bytes, TableMetadata.fromJson(new String(bytes, UTF_8))))
   }
 
-  /** Parse a slim document, inflate its snapshot bodies and cache the
-    * result under its key. */
-  private def inflate(md: String, key: String, bytes: Array[Byte]): TableMetadata = {
-    val m = SnapshotBodies.inflate(md, TableMetadata.fromJson(new String(bytes, UTF_8)),
+  /** Inflate the snapshot bodies of the slim document `slim`, whose
+    * bytes are `bytes`, and cache the result under its key. */
+  private def inflate(md: String, key: String, bytes: Array[Byte],
+                      slim: TableMetadata): TableMetadata = {
+    val m = SnapshotBodies.inflate(md, slim,
       name => text(blobs.resolve(md, name))
         .getOrElse(throw new java.io.FileNotFoundException(blobs.resolve(md, name))))
     BlobMetaStore.cache(key, bytes, m)
@@ -215,16 +247,21 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
              next: TableMetadata): Boolean = {
     val md = metaDir(ns, t)
     val slim = SnapshotBodies.persist(blobs, md, next)
-    val key = metadataLocation(ns, t, expectedVersion + 1)
-    val bytes = TableMetadata.toJson(slim).getBytes(UTF_8)
+    val key = versionKey(md, expectedVersion + 1)
+    val doc = TableMetadata.toJson(slim)
+    val bytes = doc.getBytes(UTF_8)
     val won = blobs.putIfAbsent(key, bytes)
     if (won) {
+      BlobMetaStore.see(md, expectedVersion + 1)
       // heal bodies an expiry pruned while this committer stalled past the
       // grace window — the CAS won, so the content must be present
       SnapshotBodies.ensure(blobs, md, slim)
-      // the bodies persist just cached make this inflate cheap, and the
-      // load after the commit a hit
-      inflate(md, key, bytes)
+      // the bytes parse back to `slim`, unless UTF-8 wrote a lone
+      // surrogate in them as '?'; the bodies persist just cached make the
+      // inflate cheap, and the load after the commit a hit
+      inflate(md, key, bytes,
+        if (doc.exists(Character.isSurrogate)) TableMetadata.fromJson(new String(bytes, UTF_8))
+        else slim)
     }
     won
   }
@@ -330,7 +367,25 @@ object BlobMetaStore {
   private def cache(key: String, bytes: Array[Byte], m: TableMetadata): Unit =
     versions.synchronized(versions.put(key, new Version(bytes, m)))
 
-  /** Forget every version under the metadata directory `dir`. */
-  private def evictUnder(dir: String): Unit =
+  // metadata directory → the newest version number this process saw
+  // there, where the next probe starts; process-wide and in access order
+  // like the version cache. An entry is an int, so the bound is wide: a
+  // table that falls out costs one listing.
+  private val SeenBound = 4096
+  private val seenVersions = new java.util.LinkedHashMap[String, Integer](SeenBound, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Integer]): Boolean =
+      size > SeenBound
+  }
+
+  /** The newest version seen in metadata directory `dir`; 0 when none. */
+  private def seen(dir: String): Int = seenVersions.synchronized(seenVersions.getOrDefault(dir, 0))
+
+  private def see(dir: String, v: Int): Unit = seenVersions.synchronized(seenVersions.put(dir, v))
+
+  /** Forget the newest version and every cached version of the metadata
+    * directory `dir`. */
+  private def evictUnder(dir: String): Unit = {
+    seenVersions.synchronized(seenVersions.remove(dir))
     versions.synchronized(versions.keySet.removeIf(_.startsWith(s"$dir/")))
+  }
 }

@@ -26,6 +26,12 @@ object RestWire {
     def field[A: Manifest](k: String): A = (j \ k).extract[A]
     def fieldOpt[A: Manifest](k: String): Option[A] = (j \ k).extractOpt[A]
     def fieldOr[A: Manifest](k: String, default: => A): A = fieldOpt[A](k).getOrElse(default)
+    /** A member the reference binds as required: absent or null does not
+      * map, where `field` would extract an empty list or object. */
+    def required(k: String): JValue = j \ k match {
+      case JNothing | JNull => throw new MappingException(s"missing required member '$k'")
+      case v => v
+    }
   }
 
   private def obj(members: (String, Any)*): JObject =
@@ -57,8 +63,8 @@ object RestWire {
     def json: JValue = obj("namespace" -> namespace, "properties" -> properties)
   }
   object Namespace {
-    def from(j: JValue): Namespace = Namespace(
-      j.field[List[String]]("namespace"), j.fieldOr("properties", Map.empty[String, String]))
+    def from(j: JValue): Namespace = Namespace(j.required("namespace").extract[List[String]],
+      j.fieldOr("properties", Map.empty[String, String]))
   }
 
   final case class UpdateNamespace(removals: Seq[String], updates: Map[String, String]) {
@@ -77,7 +83,8 @@ object RestWire {
   object CreateTable {
     /** `stage-create: true`, which the server refuses before decoding. */
     def staged(j: JValue): Boolean = j.fieldOr("stage-create", false)
-    def from(j: JValue): CreateTable = CreateTable(j.field[String]("name"), schema(j \ "schema"),
+    def from(j: JValue): CreateTable = CreateTable(j.field[String]("name"),
+      schema(j.required("schema")),
       j.fieldOr("partition-spec", List.empty[PartitionFieldDef]),
       j.fieldOr("properties", Map.empty[String, String]))
   }

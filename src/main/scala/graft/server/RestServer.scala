@@ -34,7 +34,7 @@ import graft.meta._
   */
 final class RestServer(catalog: GraftCatalog, port: Int = 0,
                        host: String = "127.0.0.1") {
-  private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
+  private val server = RestServer.create(host, port)
   server.createContext("/", handle _)
   // concurrent request handling (gin serves per-goroutine; handlers are
   // stateless and the store's CAS protocol arbitrates writers); threads
@@ -363,4 +363,17 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
 
   private def toJObj(m: Map[String, String]): JObject =
     JObject(m.toList.map { case (k, v) => k -> (JString(v): JValue) })
+}
+
+object RestServer {
+  // TCP_NODELAY on every connection, as gin has by Go's default. The JDK
+  // server leaves Nagle's algorithm on unless this property is set, and
+  // reads it once, when its first server is created; without it a small
+  // body, sent after the headers, waits ~40 ms for the client's delayed
+  // ACK. A value the JVM was started with is kept.
+  private val NoDelay = "sun.net.httpserver.nodelay"
+  if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+
+  private def create(host: String, port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress(host, port), 0)
 }

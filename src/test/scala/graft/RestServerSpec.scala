@@ -605,4 +605,51 @@ class RestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(req("HEAD", "/v1/namespaces/drop_race/tables/t").statusCode() == 404)
     }
   }
+
+  test("a create-namespace body without a namespace answers 400, creates nothing") {
+    val before = catalog.metadataStore.listNamespaces(Nil)
+    for (body <- Seq("{}", """{"namespace":null,"properties":{"k":"v"}}""")) {
+      val r = req("POST", "/v1/namespaces", body)
+      assert(r.statusCode() == 400, s"$body: ${r.statusCode()} ${r.body()}")
+      val e = parse(r) \ "error"
+      assert((e \ "type").extract[String] == "BadRequestException")
+      assert((e \ "code").extract[Int] == 400)
+      assert((e \ "message").extract[String].contains("namespace"))
+    }
+    assert(catalog.metadataStore.listNamespaces(Nil) == before)
+  }
+
+  test("a create-table body without a schema answers 400; an empty field list is a table") {
+    req("POST", "/v1/namespaces", """{"namespace":["no_schema"]}""")
+    val r = req("POST", "/v1/namespaces/no_schema/tables", """{"name":"t2"}""")
+    assert(r.statusCode() == 400, r.body())
+    assert((parse(r) \ "error" \ "type").extract[String] == "BadRequestException")
+    assert(req("HEAD", "/v1/namespaces/no_schema/tables/t2").statusCode() == 404)
+    val empty = req("POST", "/v1/namespaces/no_schema/tables",
+      """{"name":"t3","schema":{"fields":[]}}""")
+    assert(empty.statusCode() == 200, empty.body())
+    assert(((parse(empty) \ "metadata" \ "schemas")(0) \ "fields").extract[List[JValue]].isEmpty)
+  }
+
+  test("small answers on a keep-alive connection do not wait for a delayed ACK") {
+    req("POST", "/v1/namespaces", """{"namespace":["small"]}""")
+    req("POST", "/v1/namespaces/small/tables", s"""{"name":"t","schema":$tableSchema}""")
+    val http11 = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    def p50Ms(path: String, status: Int): Double = {
+      val ms = (1 to 50).map { _ =>
+        val t0 = System.nanoTime()
+        val r = http11.send(HttpRequest.newBuilder(URI.create(base + path)).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == status, s"$path: ${r.body()}")
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      ms(ms.size / 2)
+    }
+    // a stalled answer waits ~40 ms for the client's delayed ACK
+    for ((path, status) <- Seq("/v1/namespaces/small/tables" -> 200,
+        "/v1/namespaces/small" -> 200, "/v1/config" -> 200, "/v1/namespaces/no_such_ns" -> 404)) {
+      val p50 = p50Ms(path, status)
+      assert(p50 < 10, f"$path: p50 $p50%.1f ms over 50 calls")
+    }
+  }
 }

@@ -1,5 +1,6 @@
 package graft.meta
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.json4s.jackson.Serialization
 import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -106,5 +107,23 @@ class MetaJsonPropertySpec extends AnyFunSuite {
 
   test("snapshot bodies equal Serialization.write(Body)") {
     check(Prop.forAll(body)(b => MetaJson.body(b) == Serialization.write(b)))
+  }
+
+  test("a slim document parses back to itself, and a won commit caches what its bytes load as") {
+    val blobs = new InMemoryBlobStore
+    val store = new BlobMetaStore(blobs)
+    val tables = Iterator.from(1).map(i => s"t$i")
+    check(Prop.forAll(table) { m =>
+      val t = tables.next()
+      val key = store.metadataLocation(Seq("db"), t, 1)
+      val md = key.substring(0, key.lastIndexOf('/'))
+      val slim = SnapshotBodies.persist(blobs, md, m)
+      val parsed = TableMetadata.fromJson(TableMetadata.toJson(slim))
+      assert(store.commit(Seq("db"), t, 0, m))
+      val loaded = SnapshotBodies.inflate(md,
+        TableMetadata.fromJson(new String(blobs.get(key).get, UTF_8)),
+        n => new String(blobs.get(blobs.resolve(md, n)).get, UTF_8))
+      parsed == slim && store.load(Seq("db"), t)._1 == loaded
+    })
   }
 }
