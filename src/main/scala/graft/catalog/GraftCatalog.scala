@@ -1449,45 +1449,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val latest = store.currentVersion(ns, ident.name)
     if (latest == 0) throw new NoSuchTableException(ident)
     val cutoff = math.max(latest - keep + 1, 1)
-    // a file is live iff some retained version's *current* snapshot holds
-    // it (the snapshot history list inside newer metadata references every
-    // past file — using it would retain everything forever). Live
-    // equality-delete files count too (they're parquet under the data
-    // dir), as does everything reachable from a NAMED REF in the latest
-    // metadata — a tagged "known good" snapshot must survive expiry.
     val latestMeta = store.loadVersion(ns, ident.name, latest)
-    val refSnapshots = latestMeta.refs.values.map(_.snapshotId).toSet
-    def liveFiles(s: graft.meta.SnapshotDef): Seq[String] =
-      s.files ++ s.deleteFiles.map(_.path)
-    val retainedMetas = (cutoff to latest).map(v =>
-      store.loadVersion(ns, ident.name, v))
-    val retainedFiles = (retainedMetas.flatMap(
-      _.currentSnapshot.map(liveFiles).getOrElse(Nil))
-      ++ latestMeta.snapshots.filter(s => refSnapshots.contains(s.snapshotId))
-      .flatMap(liveFiles)).toSet
+    val retainedMetas = (cutoff until latest).map(v =>
+      store.loadVersion(ns, ident.name, v)) :+ latestMeta
     // trim expired snapshot ENTRIES out of the live document: without
     // this the snapshots list (headers + body references) grows with
     // every commit forever, and expired history pins its bodies against
     // GC. A retained version's current snapshot and every ref-pinned
     // snapshot stay; the verb re-validates refs on CAS retry.
-    val retainedIds = retainedMetas.flatMap(_.currentSnapshotId).toSet
-    val removable = latestMeta.snapshots.map(_.snapshotId)
-      .filterNot(id => retainedIds.contains(id) || refSnapshots.contains(id))
+    val live = liveSnapshots(latestMeta, retainedMetas)
+    val liveIds = live.map(_.snapshotId).toSet
+    val removable = latestMeta.snapshots.map(_.snapshotId).filterNot(liveIds)
     if (removable.nonEmpty)
       store.commitOps(ns, ident.name, Nil,
         Seq(graft.commit.MetadataUpdate.RemoveSnapshots(removable)))
-    val dataDir = store.dataDir(ns, ident.name)
-    var removed = 0
-    // delete unreferenced data files
-    store.listParquetUnder(dataDir).foreach { rel =>
-      val abs = dataDir + "/" + rel
-      // vanished (None) counts as young: never delete what we can't date
-      val youngerThanGrace = store.lastModifiedMs(abs)
-        .forall(_ > System.currentTimeMillis() - graceMs)
-      if (!retainedFiles.contains(rel) && !youngerThanGrace) {
-        if (store.deleteFileIfExists(abs)) removed += 1
-      }
-    }
+    val removed = sweepData(ns, ident.name, live, graceMs)
     // drop expired metadata versions (current pointer = max version file)
     (1 until cutoff).foreach { v =>
       store.deleteFileIfExists(store.metadataLocation(ns, ident.name, v))
@@ -1505,36 +1481,47 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * parquet before the CAS, and a process death skips the cleanup
     * path). Unlike [[expireSnapshots]] this keeps every metadata
     * version: a file is live iff ANY version's current snapshot (or a
-    * named ref) reaches it, so time travel is untouched. The grace
-    * window protects in-flight commits: a writer may have staged files
-    * whose commit hasn't landed yet — files younger than `graceMs`
-    * (or of unknown age) are never deleted. */
+    * named ref) reaches it, so time travel is untouched. A version that
+    * is absent (expired) holds no files; one that exists but cannot be
+    * read aborts the sweep before it deletes anything, since the files
+    * it references are unknown. */
   def removeOrphanFiles(ident: Identifier, graceMs: Long = 3600000L): Int = {
     val ns = ident.namespace.toSeq
     val latest = store.currentVersion(ns, ident.name)
     if (latest == 0) throw new NoSuchTableException(ident)
     val latestMeta = store.loadVersion(ns, ident.name, latest)
-    val refSnapshots = latestMeta.refs.values.map(_.snapshotId).toSet
-    def liveFiles(s: graft.meta.SnapshotDef): Seq[String] =
-      s.files ++ s.deleteFiles.map(_.path)
-    val live = ((1 to latest).flatMap { v =>
-      try store.loadVersion(ns, ident.name, v).currentSnapshot
-        .map(liveFiles).getOrElse(Nil)
-      catch { case _: Exception => Nil } // an expired version holds no refs
-    } ++ latestMeta.snapshots.filter(s => refSnapshots.contains(s.snapshotId))
-      .flatMap(liveFiles)).toSet
-    val dataDir = store.dataDir(ns, ident.name)
-    var removed = 0
-    store.listParquetUnder(dataDir).foreach { rel =>
+    val versions = (1 until latest).flatMap { v =>
+      try Some(store.loadVersion(ns, ident.name, v))
+      catch { case _: NoSuchTableException => None }
+    } :+ latestMeta
+    sweepData(ns, ident.name, liveSnapshots(latestMeta, versions), graceMs)
+  }
+
+  /** The liveness rule both maintenance verbs share: the current
+    * snapshot of each of `versions`, plus every snapshot a named ref of
+    * `latest` pins (a tagged "known good" snapshot survives). Only
+    * current snapshots count: the history list of newer metadata
+    * references every past file, and would keep everything forever. */
+  private def liveSnapshots(latest: TableMetadata,
+                            versions: Seq[TableMetadata]): Seq[SnapshotDef] = {
+    val pinned = latest.refs.values.map(_.snapshotId).toSet
+    versions.flatMap(_.currentSnapshot) ++ latest.snapshots.filter(s => pinned(s.snapshotId))
+  }
+
+  /** Delete the data-dir files no `live` snapshot holds as a data or
+    * delete file and that are older than `graceMs` (see
+    * [[expireSnapshots]]); a file whose age cannot be read counts as
+    * young. @return the number of files deleted */
+  private def sweepData(ns: Seq[String], table: String, live: Seq[SnapshotDef],
+                        graceMs: Long): Int = {
+    val files = live.flatMap(s => s.files ++ s.deleteFiles.map(_.path)).toSet
+    val dataDir = store.dataDir(ns, table)
+    val cutoff = System.currentTimeMillis() - graceMs
+    store.listParquetUnder(dataDir).count { rel =>
       val abs = dataDir + "/" + rel
-      // vanished (None) counts as young: never delete what we can't date
-      val youngerThanGrace = store.lastModifiedMs(abs)
-        .forall(_ > System.currentTimeMillis() - graceMs)
-      if (!live.contains(rel) && !youngerThanGrace) {
-        if (store.deleteFileIfExists(abs)) removed += 1
-      }
+      !files(rel) && store.lastModifiedMs(abs).exists(_ <= cutoff) &&
+        store.deleteFileIfExists(abs)
     }
-    removed
   }
 
   // purgeTable: TableCatalog's default throws UnsupportedOperationException,

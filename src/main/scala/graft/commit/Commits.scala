@@ -69,7 +69,11 @@ object Commits {
 
 /** Pure metadata delta; `apply` is total given a valid base (ordering
   * matters — AddSchema must precede the SetCurrentSchema that points at
-  * it, mirroring `server_test.go:216-220`). */
+  * it, mirroring `server_test.go:216-220`). The seven file-carrying
+  * updates (AppendFiles, OverwritePartitions, RewriteFiles, RowDelta,
+  * RewriteDeletes, ReplaceFiles, AppendFilesToRef) build their snapshot
+  * with one private builder, `successor`, the counterpart of Iceberg's
+  * `SnapshotProducer`; each keeps only its own guard and arguments. */
 sealed trait MetadataUpdate { def apply(m: TableMetadata): TableMetadata }
 object MetadataUpdate {
   final case class AddSchema(schema: SchemaDef) extends MetadataUpdate {
@@ -109,6 +113,36 @@ object MetadataUpdate {
         currentSnapshotId = Some(snapshot.snapshotId),
         lastSequenceNumber = m.lastSequenceNumber + 1)
   }
+  /** The snapshot that follows `base` (None: an empty table) at
+    * sequence `seq`: the base's files minus those `removed` selects,
+    * then `added`. Kept files keep their stats and sequences; when the
+    * update removes files (`removed` is set, even to nothing) their
+    * stats and sequences are restricted to the kept files; an append
+    * carries the base's maps as they are. Added files get `stats` and
+    * sequence `seq`. `deletes` maps the base's delete files to the
+    * successor's. Carried map entries iterate before added ones, which
+    * fixes the bytes of the rendered body. The parent is left unset:
+    * [[AddSnapshot]] stamps it and moves main; a branch append sets it
+    * to the branch head. */
+  private def successor(base: Option[SnapshotDef], seq: Long, timestampMs: Long,
+                        operation: String, summary: Map[String, String],
+                        added: List[String], stats: Map[String, List[ColStatDef]],
+                        removed: Option[String => Boolean] = None,
+                        deletes: List[DeleteFileDef] => List[DeleteFileDef] = identity): SnapshotDef = {
+    val files = base.fold(List.empty[String])(_.files)
+    val fileStats = base.fold(Map.empty[String, List[ColStatDef]])(_.fileStats)
+    val fileSeqs = base.fold(Map.empty[String, Long])(_.fileSeqs)
+    val (kept, keptStats, keptSeqs) = removed match {
+      case None => (files, fileStats, fileSeqs)
+      case Some(gone) =>
+        val kept = files.filterNot(gone)
+        val keep = kept.toSet
+        (kept, fileStats.view.filterKeys(keep).toMap, fileSeqs.view.filterKeys(keep).toMap)
+    }
+    SnapshotDef(seq, timestampMs, operation, kept ++ added, summary, keptStats ++ stats,
+      deletes(base.fold(List.empty[DeleteFileDef])(_.deleteFiles)), keptSeqs ++ added.map(_ -> seq))
+  }
+
   /** Append: new data files join whatever the *fresh* base's current
     * snapshot holds — the delta is computed at apply time, inside the
     * committer's retry loop, so two racing appends both survive (the
@@ -119,19 +153,10 @@ object MetadataUpdate {
                                stats: Map[String, List[ColStatDef]] = Map.empty,
                                extraSummary: Map[String, String] = Map.empty)
     extends MetadataUpdate {
-    def apply(m: TableMetadata): TableMetadata = {
-      val prev = m.currentSnapshot.map(_.files).getOrElse(Nil)
-      val prevStats = m.currentSnapshot.map(_.fileStats).getOrElse(Map.empty)
-      val seq = m.lastSequenceNumber + 1
-      AddSnapshot(SnapshotDef(
-        snapshotId = seq, timestampMs = timestampMs,
-        operation = "append", files = prev ++ newFiles,
-        summary = extraSummary + ("added-files" -> newFiles.size.toString),
-        fileStats = prevStats ++ stats,
-        deleteFiles = m.currentSnapshot.map(_.deleteFiles).getOrElse(Nil),
-        fileSeqs = m.currentSnapshot.map(_.fileSeqs).getOrElse(Map.empty) ++
-          newFiles.map(_ -> seq))).apply(m)
-    }
+    def apply(m: TableMetadata): TableMetadata =
+      AddSnapshot(successor(m.currentSnapshot, m.lastSequenceNumber + 1, timestampMs, "append",
+        extraSummary + ("added-files" -> newFiles.size.toString),
+        newFiles, stats)).apply(m)
   }
   /** Partition overwrite: drop every previous file whose partition-dir
     * key/values FULLY match one of `partitionValues` (each map is one
@@ -148,7 +173,6 @@ object MetadataUpdate {
     extends MetadataUpdate {
     def apply(m: TableMetadata): TableMetadata = {
       val prev = m.currentSnapshot.map(_.files).getOrElse(Nil)
-      val prevStats = m.currentSnapshot.map(_.fileStats).getOrElse(Map.empty)
       // authoritative layout guard, re-run against the FRESH base on
       // every CAS retry: a racer may have committed files without the
       // referenced dir keys (e.g. written under an older spec); those
@@ -165,19 +189,12 @@ object MetadataUpdate {
         partitionValues.exists(pv =>
           pv.nonEmpty && pv.forall { case (k, v) => kvs.get(k).contains(v) })
       }
-      val kept = prev.filterNot(replaced)
-      val seq = m.lastSequenceNumber + 1
-      AddSnapshot(SnapshotDef(
-        snapshotId = seq, timestampMs = timestampMs,
-        operation = "overwrite-partitions", files = kept ++ newFiles,
-        summary = extraSummary +
+      val gone = prev.filter(replaced).toSet
+      AddSnapshot(successor(m.currentSnapshot, m.lastSequenceNumber + 1, timestampMs,
+        "overwrite-partitions", extraSummary +
           ("added-files" -> newFiles.size.toString) +
-          ("replaced-files" -> (prev.size - kept.size).toString),
-        fileStats = prevStats.view.filterKeys(kept.toSet).toMap ++ stats,
-        deleteFiles = m.currentSnapshot.map(_.deleteFiles).getOrElse(Nil),
-        fileSeqs = m.currentSnapshot.map(_.fileSeqs).getOrElse(Map.empty)
-          .view.filterKeys(kept.toSet).toMap ++
-          newFiles.map(_ -> seq))).apply(m)
+          ("replaced-files" -> prev.count(gone).toString),
+        newFiles, stats, removed = Some(gone))).apply(m)
     }
   }
   /** Copy-on-write rewrite: the `removed` files (a scanned subset of the
@@ -200,24 +217,15 @@ object MetadataUpdate {
       require(missing.isEmpty,
         s"rewrite removes files absent from the current snapshot: " +
           missing.take(3).mkString(", "))
-      val prevStats = m.currentSnapshot.map(_.fileStats).getOrElse(Map.empty)
-      val kept = prev.filterNot(removed.toSet)
-      val seq = m.lastSequenceNumber + 1
-      AddSnapshot(SnapshotDef(
-        snapshotId = seq, timestampMs = timestampMs,
-        operation = "rewrite", files = kept ++ added,
-        summary = extraSummary +
+      // delete files stay: they still mask rows in the KEPT files. The
+      // added files get this commit's sequence, so no older delete
+      // ever applies to them — the rewrite read through the deletes,
+      // its output is already net of them
+      AddSnapshot(successor(m.currentSnapshot, m.lastSequenceNumber + 1, timestampMs, "rewrite",
+        extraSummary +
           ("rewritten-files" -> removed.size.toString) +
           ("added-files" -> added.size.toString),
-        // delete files stay: they still mask rows in the KEPT files. The
-        // added files get this commit's sequence, so no older delete
-        // ever applies to them — the rewrite read through the deletes,
-        // its output is already net of them
-        fileStats = prevStats.view.filterKeys(kept.toSet).toMap ++ stats,
-        deleteFiles = m.currentSnapshot.map(_.deleteFiles).getOrElse(Nil),
-        fileSeqs = m.currentSnapshot.map(_.fileSeqs).getOrElse(Map.empty)
-          .view.filterKeys(kept.toSet).toMap ++
-          added.map(_ -> seq))).apply(m)
+        added, stats, removed = Some(removed.toSet))).apply(m)
     }
   }
 
@@ -235,21 +243,13 @@ object MetadataUpdate {
                             extraSummary: Map[String, String] = Map.empty)
     extends MetadataUpdate {
     def apply(m: TableMetadata): TableMetadata = {
-      val prev = m.currentSnapshot.map(_.files).getOrElse(Nil)
-      val prevStats = m.currentSnapshot.map(_.fileStats).getOrElse(Map.empty)
       val seq = m.lastSequenceNumber + 1
-      AddSnapshot(SnapshotDef(
-        snapshotId = seq, timestampMs = timestampMs,
-        operation = "delta", files = prev ++ addedData,
-        summary = extraSummary +
+      AddSnapshot(successor(m.currentSnapshot, seq, timestampMs, "delta",
+        extraSummary +
           ("added-files" -> addedData.size.toString) +
           ("added-delete-files" -> addedDeletes.size.toString) +
           ("deleted-rows" -> addedDeletes.map(_.rows).sum.toString),
-        fileStats = prevStats ++ stats,
-        deleteFiles = m.currentSnapshot.map(_.deleteFiles).getOrElse(Nil) ++
-          addedDeletes.map(_.copy(seq = seq)),
-        fileSeqs = m.currentSnapshot.map(_.fileSeqs).getOrElse(Map.empty) ++
-          addedData.map(_ -> seq))).apply(m)
+        addedData, stats, deletes = _ ++ addedDeletes.map(_.copy(seq = seq)))).apply(m)
     }
   }
 
@@ -266,39 +266,30 @@ object MetadataUpdate {
                                   extraSummary: Map[String, String] = Map.empty)
     extends MetadataUpdate {
     def apply(m: TableMetadata): TableMetadata = {
-      val cur = m.currentSnapshot.getOrElse(
-        throw new IllegalStateException("rewrite-deletes on an empty table"))
+      if (m.currentSnapshot.isEmpty)
+        throw new IllegalStateException("rewrite-deletes on an empty table")
       val removedSet = removed.toSet
-      AddSnapshot(SnapshotDef(
-        snapshotId = m.lastSequenceNumber + 1, timestampMs = timestampMs,
-        operation = "rewrite-deletes", files = cur.files,
-        summary = extraSummary +
+      AddSnapshot(successor(m.currentSnapshot, m.lastSequenceNumber + 1, timestampMs,
+        "rewrite-deletes", extraSummary +
           ("removed-delete-files" -> removed.size.toString) +
           ("added-delete-files" -> added.size.toString),
-        fileStats = cur.fileStats,
-        deleteFiles = cur.deleteFiles.filterNot(d => removedSet(d.path)) ++ added,
-        fileSeqs = cur.fileSeqs)).apply(m)
+        Nil, Map.empty, deletes = _.filterNot(d => removedSet(d.path)) ++ added)).apply(m)
     }
   }
 
-  /** Overwrite: the new snapshot holds exactly the new files. */
+  /** Overwrite: the new snapshot holds exactly the new files — it
+    * stacks on no base, so nothing is carried. That includes the delete
+    * files: the new file set is authoritative (compaction reads THROUGH
+    * the old deletes before writing it; INSERT OVERWRITE discards the
+    * rows they masked anyway). */
   final case class ReplaceFiles(newFiles: List[String], timestampMs: Long,
                                 stats: Map[String, List[ColStatDef]] = Map.empty,
                                 extraSummary: Map[String, String] = Map.empty)
     extends MetadataUpdate {
-    def apply(m: TableMetadata): TableMetadata = {
-      val seq = m.lastSequenceNumber + 1
-      AddSnapshot(SnapshotDef(
-        snapshotId = seq, timestampMs = timestampMs,
-        operation = "overwrite", files = newFiles,
-        summary = extraSummary + ("added-files" -> newFiles.size.toString),
-        // a full replacement carries no delete files forward: the new
-        // file set is authoritative (compaction reads THROUGH the old
-        // deletes before writing it; INSERT OVERWRITE discards the rows
-        // they masked anyway)
-        fileStats = stats,
-        fileSeqs = newFiles.map(_ -> seq).toMap)).apply(m)
-    }
+    def apply(m: TableMetadata): TableMetadata =
+      AddSnapshot(successor(None, m.lastSequenceNumber + 1, timestampMs, "overwrite",
+        extraSummary + ("added-files" -> newFiles.size.toString),
+        newFiles, stats)).apply(m)
   }
   final case class AddPartitionSpec(spec: PartitionSpecDef) extends MetadataUpdate {
     def apply(m: TableMetadata): TableMetadata = {
@@ -393,15 +384,9 @@ object MetadataUpdate {
       val base = m.snapshots.find(_.snapshotId == rd.snapshotId).getOrElse(
         throw new IllegalStateException(s"branch '$ref' points at a missing snapshot"))
       val seq = m.lastSequenceNumber + 1
-      val snap = SnapshotDef(
-        snapshotId = seq, timestampMs = timestampMs,
-        operation = "append", files = base.files ++ newFiles,
-        summary = extraSummary +
-          ("added-files" -> newFiles.size.toString) + ("branch" -> ref),
-        fileStats = base.fileStats ++ stats,
-        deleteFiles = base.deleteFiles,
-        fileSeqs = base.fileSeqs ++ newFiles.map(_ -> seq),
-        parentId = Some(rd.snapshotId))
+      val snap = successor(Some(base), seq, timestampMs, "append",
+        extraSummary + ("added-files" -> newFiles.size.toString) + ("branch" -> ref),
+        newFiles, stats).copy(parentId = Some(rd.snapshotId))
       m.copy(snapshots = m.snapshots :+ snap,
         refs = m.refs + (ref -> rd.copy(snapshotId = seq)),
         lastSequenceNumber = seq)

@@ -40,7 +40,7 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
     s"${nsPath(ns)}/tables/${RestWire.segment(t)}"
 
   private case class Resp(code: Int, body: String) {
-    def json: JValue = JsonMethods.parse(body)
+    lazy val json: JValue = JsonMethods.parse(body)
   }
 
   private def call(method: String, path: String, body: Option[JValue] = None): Resp = {
@@ -122,9 +122,7 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
       Set(200), ns, Some(t))
     val loc = (r.json \ "metadata-location").extract[String]
     val v = loc match { case VersionRe(n) => n.toInt; case _ => 0 }
-    val m = TableMetadata.fromJson(
-      JsonMethods.compact(JsonMethods.render(r.json \ "metadata")))
-    (m, v, loc)
+    (TableMetadata.fromJson(r.json \ "metadata"), v, loc)
   }
 
   def load(ns: Seq[String], t: String): (TableMetadata, Int) = {
@@ -162,9 +160,7 @@ final class RestMetadataStore(val warehouse: String) extends MetaStore {
                          updates: Seq[MetadataUpdate]): TableMetadata = {
     val r = call("POST", tablePath(ns, table),
       Some(RestWire.Commit(requirements, updates).json))
-    val ok = expect(r, Set(200), ns, Some(table))
-    TableMetadata.fromJson(
-      JsonMethods.compact(JsonMethods.render(ok.json \ "metadata")))
+    TableMetadata.fromJson(expect(r, Set(200), ns, Some(table)).json \ "metadata")
   }
 
   def dropTable(ns: Seq[String], t: String): Boolean = {

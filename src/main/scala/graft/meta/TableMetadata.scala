@@ -1,7 +1,7 @@
 package graft.meta
 
 import org.json4s._
-import org.json4s.jackson.Serialization
+import org.json4s.jackson.{JsonMethods, Serialization}
 
 /** Versioned table-metadata model, the Spark-native re-expression of the
   * metadata document the reference serves (reference: the `LoadTableResponse
@@ -118,8 +118,11 @@ object TableMetadata {
   implicit val formats: Formats = Serialization.formats(NoTypeHints)
 
   def toJson(m: TableMetadata): String = MetaJson.pretty(m)
-  def fromJson(s: String): TableMetadata = {
-    val m = Serialization.read[TableMetadata](s)
+  def fromJson(s: String): TableMetadata = fromJson(JsonMethods.parse(s))
+  /** A document already parsed, such as the `metadata` member of a REST
+    * loadTable response. */
+  def fromJson(j: JValue): TableMetadata = {
+    val m = j.extract[TableMetadata]
     // refuse documents from a NEWER writer: a format this reader does
     // not understand could parse "successfully" as an empty table
     // (exactly what body-referencing docs look like to a v1 reader)

@@ -321,7 +321,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
 
   private def loadTable(ex: HttpExchange, seg: String, t: String): Unit =
     respondLoadTable(ex, ns(seg), t,
-      query(ex).get("version").map(_.toInt))
+      query(ex).get("version").map(v => v.toIntOption.getOrElse(
+        throw new MappingException(s"version must be an int, got '$v'"))))
 
   private def headTable(ex: HttpExchange, seg: String, t: String): Unit =
     if (catalog.metadataStore.tableExists(ns(seg), t)) empty(ex, 204)

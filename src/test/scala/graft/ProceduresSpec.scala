@@ -719,4 +719,29 @@ class ProceduresSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql("CALL graft.proc.compact(table => 'proc.o')").collect()
     }
   }
+
+  test("remove_orphan_files aborts on an unreadable version instead of deleting its files") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.proc")
+    spark.sql("CREATE TABLE graft.proc.unreadable (k INT)")
+    spark.sql("INSERT INTO graft.proc.unreadable VALUES (1)")
+    val cat = spark.sessionState.catalogManager.catalog("graft")
+      .asInstanceOf[GraftCatalog]
+    val store = cat.metadataStore
+    val appended = store.currentVersion(Seq("proc"), "unreadable")
+    val f1 = store.loadVersion(Seq("proc"), "unreadable", appended)
+      .currentSnapshot.get.files
+    spark.sql("INSERT OVERWRITE graft.proc.unreadable VALUES (2)")
+    val dataDir = store.dataDir(Seq("proc"), "unreadable")
+    assert(f1.nonEmpty && f1.forall(f => Files.exists(java.nio.file.Paths.get(dataDir, f))))
+    // only the appending version references f1; make its document
+    // unparseable (new bytes, so no cached copy of it is served)
+    Files.write(java.nio.file.Paths.get(
+      store.metadataLocation(Seq("proc"), "unreadable", appended)),
+      "{not json".getBytes("UTF-8"))
+    val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
+      Array("proc"), "unreadable")
+    intercept[Exception](cat.removeOrphanFiles(ident, graceMs = 0L))
+    assert(f1.forall(f => Files.exists(java.nio.file.Paths.get(dataDir, f))),
+      "a file an unreadable version may reference must survive the sweep")
+  }
 }

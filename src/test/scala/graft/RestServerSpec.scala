@@ -652,4 +652,17 @@ class RestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(p50 < 10, f"$path: p50 $p50%.1f ms over 50 calls")
     }
   }
+
+  test("a loadTable ?version= that is not an int answers 400") {
+    req("POST", "/v1/namespaces", """{"namespace":["bad_version"]}""")
+    req("POST", "/v1/namespaces/bad_version/tables", s"""{"name":"t","schema":$tableSchema}""")
+    for (v <- Seq("abc", "99999999999", "1.5")) {
+      val r = req("GET", s"/v1/namespaces/bad_version/tables/t?version=$v")
+      assert(r.statusCode() == 400, s"version=$v: ${r.statusCode()} ${r.body()}")
+      val e = parse(r) \ "error"
+      assert((e \ "type").extract[String] == "BadRequestException")
+      assert((e \ "code").extract[Int] == 400)
+    }
+    assert(req("GET", "/v1/namespaces/bad_version/tables/t?version=1").statusCode() == 200)
+  }
 }
