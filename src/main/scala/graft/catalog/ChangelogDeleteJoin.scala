@@ -50,9 +50,9 @@ object ChangelogDeleteJoin extends Rule[LogicalPlan] {
     * same-named tables (every test suite does) and must not share
     * verdicts; the entry dies with its store. Without this the rule
     * re-walked the window with loadVersion on EVERY optimizer fixpoint
-    * iteration of every t$changes query (advice r8). */
-  private val memo = new java.util.WeakHashMap[
-    AnyRef, scala.collection.mutable.Map[(String, Long, Long), Boolean]]()
+    * iteration of every t$changes query (advice r8). Each store keeps
+    * its 4096 most recently used windows. */
+  private val memo = new java.util.WeakHashMap[AnyRef, graft.Lru[(String, Long, Long), Boolean]]()
 
   /** True iff some step in the requested window carries more live
     * delete-file bytes than the table's broadcast-class budget —
@@ -65,23 +65,23 @@ object ChangelogDeleteJoin extends Rule[LogicalPlan] {
     val toV = ChangesTable.resolveEndVersion(ct.store, ct.ns, ct.table,
       options, name)
     val byWindow = memo.synchronized {
-      memo.computeIfAbsent(ct.store,
-        _ => scala.collection.mutable.Map.empty)
+      memo.computeIfAbsent(ct.store, _ => new graft.Lru(bound = 4096))
     }
-    byWindow.synchronized {
-      if (byWindow.size > 4096) byWindow.clear() // crude bound, cheap refill
-      byWindow.getOrElseUpdate((name, fromV.toLong, toV.toLong),
-        ((fromV + 1) to toV).exists { v =>
-          val meta = ct.store.loadVersion(ct.ns, ct.table, v)
-          val prev =
-            if (v - 1 >= 1) Some(ct.store.loadVersion(ct.ns, ct.table, v - 1))
-            else None
-          ChangesTable.stepDiff(meta, prev).exists { diff =>
-            (diff.newDeletes ++ diff.prevDeletes)
-              .map(MergeOnRead.estBytes).sum >
-              MergeOnRead.byteBudget(meta.properties)
-          }
-        })
+    val window = (name, fromV.toLong, toV.toLong)
+    byWindow.get(window).getOrElse {
+      val over = ((fromV + 1) to toV).exists { v =>
+        val meta = ct.store.loadVersion(ct.ns, ct.table, v)
+        val prev =
+          if (v - 1 >= 1) Some(ct.store.loadVersion(ct.ns, ct.table, v - 1))
+          else None
+        ChangesTable.stepDiff(meta, prev).exists { diff =>
+          (diff.newDeletes ++ diff.prevDeletes)
+            .map(MergeOnRead.estBytes).sum >
+            MergeOnRead.byteBudget(meta.properties)
+        }
+      }
+      byWindow.put(window, over)
+      over
     }
   }
 

@@ -846,34 +846,6 @@ private[graft] final case class PosChangeInputPartition(
   override def preferredLocations(): Array[String] = delegate.preferredLocations()
 }
 
-/** Changelog stream offset: `version` = last FULLY-delivered metadata
-  * version; `fileIdx` (> 0 only mid-way through a PURE-APPEND commit)
-  * = how many of version `version`+1's added files have already been
-  * delivered — the sub-commit watermark that lets max-bytes/files
-  * pacing split one giant append into many micro-batches. Serializes
-  * as the bare version integer at a boundary (the exact pre-r9 form,
-  * so existing checkpoints resume unchanged) and as `v:k` mid-commit. */
-private[graft] case class GraftChangesOffset(version: Int, fileIdx: Int = 0)
-  extends Offset {
-  override def json(): String =
-    if (fileIdx == 0) version.toString else s"$version:$fileIdx"
-}
-
-private[graft] object GraftChangesOffset {
-  def parse(j: String): GraftChangesOffset = j.trim.split(":") match {
-    case Array(v) => GraftChangesOffset(v.trim.toInt)
-    case Array(v, k) => GraftChangesOffset(v.trim.toInt, k.trim.toInt)
-    case _ => throw new IllegalArgumentException(s"bad changes offset '$j'")
-  }
-  /** The data stream's plain-version offsets coerce losslessly (tests
-    * drive both streams with them). */
-  def of(o: Offset): GraftChangesOffset = o match {
-    case c: GraftChangesOffset => c
-    case g: GraftSourceOffset => GraftChangesOffset(g.version, g.fileIdx)
-    case other => parse(other.json())
-  }
-}
-
 /** A SPILLED changelog partition (streaming over-budget fallback): the
   * rows were precomputed by the distributed batch frame and written
   * under the stream's checkpoint, so the file already carries the
@@ -1105,11 +1077,11 @@ private[graft] class ChangesMicroBatchStream(
   private val maxBytesPerTrigger: Option[Long] =
     ChangesTable.parseMaxBytesPerTrigger(options)
 
-  override def initialOffset(): Offset = GraftChangesOffset(startVersion)
+  override def initialOffset(): Offset = GraftSourceOffset(startVersion)
   override def latestOffset(): Offset =
-    GraftChangesOffset(math.max(startVersion, store.currentVersion(ns, table)))
+    GraftSourceOffset(math.max(startVersion, store.currentVersion(ns, table)))
   override def deserializeOffset(json: String): Offset =
-    GraftChangesOffset.parse(json)
+    GraftSourceOffset.parse(json)
 
   /** Files one step will scan: added + removed, plus the kept files a
     * new equality delete forces a masked re-read of. Memoized for the
@@ -1158,25 +1130,22 @@ private[graft] class ChangesMicroBatchStream(
     * is a PURE APPEND — the only commit kind whose files are
     * independently emittable and therefore sub-splittable by pacing.
     * Memoized like the step counts (immutable versions; lengths ride
-    * the manifest layer's cache). */
-  private val appendFilesCache =
-    scala.collection.mutable.Map.empty[Int, Option[Seq[(String, Long)]]]
-  private val AppendFilesCacheMax = 16
-  private def appendFilesOf(v: Int): Option[Seq[(String, Long)]] = {
-    // bounded: unlike the int-sized step-count caches, these entries
-    // hold whole file lists — a year-long stream would otherwise pin
-    // every version's list; the walk only touches a sliding window
-    if (appendFilesCache.size >= AppendFilesCacheMax) appendFilesCache.clear()
-    appendFilesOfCached(v)
-  }
-  private def appendFilesOfCached(v: Int): Option[Seq[(String, Long)]] =
-    appendFilesCache.getOrElseUpdate(v, stepDiffAt(v).flatMap { d =>
-      if (d.removed.isEmpty && d.newDeletes.isEmpty && d.added.nonEmpty) {
-        val lens = ManifestFileIndex.lengthsFor(SparkSession.active,
-          store.dataDir(ns, table), d.added)
-        Some(d.added.map(r => r -> lens(r)))
-      } else None
-    })
+    * the manifest layer's cache). Bounded, unlike the int-sized step
+    * counts: these entries hold whole file lists, and the walk only
+    * touches a sliding window of versions. */
+  private val appendFilesCache = new graft.Lru[Int, Option[Seq[(String, Long)]]](bound = 16)
+  private def appendFilesOf(v: Int): Option[Seq[(String, Long)]] =
+    appendFilesCache.get(v).getOrElse {
+      val files = stepDiffAt(v).flatMap { d =>
+        if (d.removed.isEmpty && d.newDeletes.isEmpty && d.added.nonEmpty) {
+          val lens = ManifestFileIndex.lengthsFor(SparkSession.active,
+            store.dataDir(ns, table), d.added)
+          Some(d.added.map(r => r -> lens(r)))
+        } else None
+      }
+      appendFilesCache.put(v, files)
+      files
+    }
 
   override def getDefaultReadLimit
       : org.apache.spark.sql.connector.read.streaming.ReadLimit = {
@@ -1202,7 +1171,7 @@ private[graft] class ChangesMicroBatchStream(
       start: Offset,
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
     import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadMaxBytes, ReadMaxFiles}
-    val st = GraftChangesOffset.of(start)
+    val st = GraftSourceOffset.of(start)
     val cur = math.max(startVersion, store.currentVersion(ns, table))
     val limits = limit match {
       case c: CompositeReadLimit => c.getReadLimits.toSeq
@@ -1211,22 +1180,22 @@ private[graft] class ChangesMicroBatchStream(
     val fileCap = limits.collectFirst { case m: ReadMaxFiles => m.maxFiles() }
     val byteCap = limits.collectFirst { case b: ReadMaxBytes => b.maxBytes() }
     if (fileCap.isEmpty && byteCap.isEmpty)
-      return GraftChangesOffset(cur)
-    if (cur <= st.version && st.fileIdx == 0) return GraftChangesOffset(cur)
+      return GraftSourceOffset(cur)
+    if (cur <= st.version && st.fileIdx == 0) return GraftSourceOffset(cur)
     val (lastFull, extra) = SubCommitWalk.walk(st.version, st.fileIdx, cur,
       fileCap, byteCap, appendFilesOf,
       atomicCost = { v =>
         (stepFileCount(v), if (byteCap.isDefined) stepByteCount(v) else 0L)
       })
-    GraftChangesOffset(lastFull, extra)
+    GraftSourceOffset(lastFull, extra)
   }
 
   override def reportLatestOffset(): Offset =
-    GraftChangesOffset(math.max(startVersion, store.currentVersion(ns, table)))
+    GraftSourceOffset(math.max(startVersion, store.currentVersion(ns, table)))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val st = GraftChangesOffset.of(start)
-    val en = GraftChangesOffset.of(end)
+    val st = GraftSourceOffset.of(start)
+    val en = GraftSourceOffset.of(end)
     val s = SparkSession.active
     val spill = Option(checkpointLocation).filter(_.nonEmpty)
     def sliced(v: Int, from: Int, until: Int): Seq[InputPartition] = {

@@ -6,19 +6,19 @@ import org.apache.spark.sql.types.StructType
 
 import graft.meta.MetaStore
 
-/** Stream offset = table metadata version, plus an optional SUB-COMMIT
-  * watermark: `version` is the last FULLY-delivered metadata version
-  * ("every file in version v's snapshot has been delivered") and
-  * `fileIdx` (> 0 only mid-way through a PURE-APPEND commit) counts how
-  * many of version `version`+1's added files have already gone out —
-  * the same `v:k` pacing watermark the changelog stream carries
-  * ([[GraftChangesOffset]]), so one giant backfill append on
-  * `readStream.table` splits into bounded micro-batches instead of
-  * planning as a single unboundable one. Versions are totally ordered,
-  * durable, and replayable (`loadVersion` serves immutable history),
-  * which makes the offset restart-safe and humanly debuggable; at a
-  * commit boundary it serializes as the bare version integer (the exact
-  * pre-r10 form), so existing checkpoints resume unchanged. */
+/** Stream offset of the data stream and the changelog stream = table
+  * metadata version, plus an optional SUB-COMMIT watermark: `version` is
+  * the last FULLY-delivered metadata version ("every file in version v's
+  * snapshot has been delivered") and `fileIdx` (> 0 only mid-way through
+  * a PURE-APPEND commit) counts how many of version `version`+1's added
+  * files have already gone out, so one giant backfill append splits into
+  * bounded micro-batches instead of planning as a single unboundable
+  * one. Versions are totally ordered, durable, and replayable
+  * (`loadVersion` serves immutable history), which makes the offset
+  * restart-safe and humanly debuggable; at a commit boundary it
+  * serializes as the bare version integer and mid-commit as `v:k`, the
+  * forms both streams have always written, so existing checkpoints
+  * resume unchanged. */
 private[graft] case class GraftSourceOffset(version: Int, fileIdx: Int = 0)
   extends Offset {
   override def json(): String =
@@ -30,6 +30,12 @@ private[graft] object GraftSourceOffset {
     case Array(v) => GraftSourceOffset(v.trim.toInt)
     case Array(v, k) => GraftSourceOffset(v.trim.toInt, k.trim.toInt)
     case _ => throw new IllegalArgumentException(s"bad source offset '$j'")
+  }
+  /** Any offset of either stream, through its json if another class
+    * carries it. */
+  def of(o: Offset): GraftSourceOffset = o match {
+    case g: GraftSourceOffset => g
+    case other => parse(other.json())
   }
 }
 
@@ -119,14 +125,12 @@ private[graft] class GraftMicroBatchStream(
     * stop version) on every trigger — without the cache a catch-up
     * trigger costs O(walked versions) metadata reads EACH time. Bounded:
     * the walk only ever touches a sliding window of versions, so a
-    * handful of entries gives full hit rate; past the bound the map is
-    * simply cleared (it is a cache, not a ledger). */
-  private val fileSetCache = scala.collection.mutable.Map.empty[Int, Seq[String]]
-  private val FileSetCacheMax = 16
+    * handful of entries gives full hit rate. */
+  private val fileSetCache = new graft.Lru[Int, Seq[String]](bound = 16)
 
   private def filesAt(v: Int): Seq[String] =
     if (v <= 0) Nil
-    else fileSetCache.getOrElse(v, {
+    else fileSetCache.get(v).getOrElse {
       val snap = store.loadVersion(ns, table, v).currentSnapshot
       // deletes committed MID-STREAM would need retractions the source
       // cannot emit — fail the stream rather than deliver deleted rows
@@ -137,10 +141,9 @@ private[graft] class GraftMicroBatchStream(
             "compact the table to fold them in before streaming")
       }
       val files = snap.map(_.files).getOrElse(Nil)
-      if (fileSetCache.size >= FileSetCacheMax) fileSetCache.clear()
-      fileSetCache(v) = files
+      fileSetCache.put(v, files)
       files
-    })
+    }
 
   /** Version v's delta as an ordered (file, length) list WHEN the commit
     * is a pure append (only new files; nothing removed, no delete files
@@ -150,25 +153,21 @@ private[graft] class GraftMicroBatchStream(
     * [[fileSetCache]] — the walk re-visits the in-progress commit every
     * trigger. Order comes from the snapshot's stored file list, which
     * is immutable per version, so a slice replays bit-identically. */
-  private val appendDeltaCache =
-    scala.collection.mutable.Map.empty[Int, Option[Seq[(String, Long)]]]
-  private def appendDeltaOf(v: Int): Option[Seq[(String, Long)]] = {
-    // bounded like fileSetCache: the walk re-visits a sliding window of
-    // versions, so a handful of entries gives full hit rate — clearing
-    // is fine (it is a cache over immutable metadata, not a ledger)
-    if (appendDeltaCache.size >= FileSetCacheMax) appendDeltaCache.clear()
-    appendDeltaCache.getOrElseUpdate(v, {
+  private val appendDeltaCache = new graft.Lru[Int, Option[Seq[(String, Long)]]](bound = 16)
+  private def appendDeltaOf(v: Int): Option[Seq[(String, Long)]] =
+    appendDeltaCache.get(v).getOrElse {
       val prev = filesAt(v - 1).toSet
       val curF = filesAt(v)
-      if (prev.subsetOf(curF.toSet)) {
+      val delta = if (prev.subsetOf(curF.toSet)) {
         val added = curF.filterNot(prev)
         val lens = ManifestFileIndex.lengthsFor(
           org.apache.spark.sql.SparkSession.active,
           store.dataDir(ns, table), added)
         Some(added.map(r => r -> lens(r)))
       } else None
-    })
-  }
+      appendDeltaCache.put(v, delta)
+      delta
+    }
 
   override def initialOffset(): Offset = GraftSourceOffset(startVersion)
 
@@ -209,7 +208,7 @@ private[graft] class GraftMicroBatchStream(
       start: Offset,
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
     import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadMaxBytes, ReadMaxFiles}
-    val st = start.asInstanceOf[GraftSourceOffset]
+    val st = GraftSourceOffset.of(start)
     val cur = math.max(startVersion, store.currentVersion(ns, table))
     // Trigger.AvailableNow wraps the default limit in a composite —
     // honor the budgets inside it rather than draining everything
@@ -237,8 +236,8 @@ private[graft] class GraftMicroBatchStream(
     GraftSourceOffset.parse(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val st = start.asInstanceOf[GraftSourceOffset]
-    val en = end.asInstanceOf[GraftSourceOffset]
+    val st = GraftSourceOffset.of(start)
+    val en = GraftSourceOffset.of(end)
     if (en.version < st.version ||
         (en.version == st.version && en.fileIdx <= st.fileIdx)) return Array.empty
     // snapshot file lists are cumulative under appends, so the set

@@ -52,8 +52,7 @@ private[graft] object ManifestFileIndex {
     * (Caching whole DIRECTORY listings would be wrong: the streaming
     * sink reuses one staging dir across epochs, so a listing can catch
     * a later epoch's file mid-write and freeze a partial length.) */
-  private val fileLenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val fileLenCache = new graft.Lru[String, Long](bound = 1 << 20)
 
   /** Lengths for manifest-relative files under `dataDir`. Uncached
     * files are resolved with ONE fresh listStatus per distinct parent
@@ -62,23 +61,24 @@ private[graft] object ManifestFileIndex {
     * file is never recorded. */
   def lengthsFor(spark: SparkSession, dataDir: String,
                  rels: Seq[String]): Map[String, Long] = {
-    if (fileLenCache.size > (1 << 20)) fileLenCache.clear()
     val hconf = spark.sessionState.newHadoopConf()
     val fs = new Path(dataDir).getFileSystem(hconf)
-    val abs = rels.map(rel => rel -> fs.makeQualified(new Path(s"$dataDir/$rel")))
-    val pending = abs.filterNot { case (_, p) =>
-      fileLenCache.containsKey(p.toString) }
+    val abs = rels.map { rel =>
+      val p = fs.makeQualified(new Path(s"$dataDir/$rel"))
+      (rel, p, fileLenCache.get(p.toString))
+    }
     val listed: Map[String, Map[String, Long]] =
-      pending.map(_._2.getParent).distinct.map { dir =>
+      abs.collect { case (_, p, None) => p.getParent }.distinct.map { dir =>
         dir.toString -> fs.listStatus(dir)
           .filter(_.isFile).map(s => s.getPath.getName -> s.getLen).toMap
       }.toMap
-    abs.map { case (rel, p) =>
-      val len: Long = fileLenCache.computeIfAbsent(p.toString, { _ =>
-        listed.get(p.getParent.toString).flatMap(_.get(p.getName))
-          .getOrElse(fs.getFileStatus(p).getLen): Long
-      })
-      rel -> len
+    abs.map { case (rel, p, known) =>
+      rel -> known.getOrElse {
+        val len = listed.get(p.getParent.toString).flatMap(_.get(p.getName))
+          .getOrElse(fs.getFileStatus(p).getLen)
+        fileLenCache.put(p.toString, len)
+        len
+      }
     }.toMap
   }
 

@@ -446,8 +446,10 @@ trait CommitTarget {
   * the same race would otherwise re-collide in lockstep — a thundering
   * herd that turns contention into livelock. The first retry is
   * sleep-free (local stores resolve races in microseconds). */
-final class Committer(store: CommitTarget, maxRetries: Int = 100,
-                      backoffBaseMs: Long = 1, backoffCapMs: Long = 200) {
+final class Committer(store: CommitTarget) {
+  private val maxRetries = 100
+  private val backoffBaseMs = 1L
+  private val backoffCapMs = 200L
 
   def commit(ns: Seq[String], table: String,
              requirements: Seq[Requirement],

@@ -387,9 +387,9 @@ object AnnIndex {
     * MEMOIZED per (table fqn, metadata version, column, value set):
     * repeated searches against an unchanged index re-read nothing —
     * any commit bumps the metadata version and naturally invalidates.
-    * The cache is value-bounded (cleared past [[RowBoundCacheMax]]
-    * entries) so a long-lived session scanning many probe sets cannot
-    * grow it without bound. */
+    * The cache keeps the 1024 most recently used bounds, so a
+    * long-lived session scanning many probe sets cannot grow it without
+    * bound. */
   private[graft] def prunedRowBound(s: SparkSession, tableFqn: String,
                                   colName: String,
                                   vals: Seq[Any]): Option[Long] = {
@@ -400,7 +400,7 @@ object AnnIndex {
         parts.tail.init, parts.last))
       .asInstanceOf[graft.catalog.GraftTable]
     val key = (tableFqn, table.metaVersion, colName, vals.toList)
-    Option(rowBoundCache.get(key)).map(_.bound).getOrElse {
+    rowBoundCache.get(key).getOrElse {
       rowBoundMisses.incrementAndGet()
       val sb = table
         .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
@@ -409,19 +409,13 @@ object AnnIndex {
       sb.pushFilters(Array[org.apache.spark.sql.sources.Filter](
         org.apache.spark.sql.sources.In(colName, vals.toArray)))
       val bound = sb.prunedManifestRows
-      if (rowBoundCache.size >= RowBoundCacheMax) rowBoundCache.clear()
-      rowBoundCache.put(key, RowBound(bound))
+      rowBoundCache.put(key, bound)
       bound
     }
   }
 
-  /** Option[Long] can't live in a ConcurrentHashMap value slot as-is
-    * (None vs absent would be ambiguous through `get`'s null). */
-  private case class RowBound(bound: Option[Long])
-  private val RowBoundCacheMax = 1024
   private val rowBoundCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Int, String, List[Any]), RowBound]()
+    new graft.Lru[(String, Int, String, List[Any]), Option[Long]](bound = 1024)
   /** Cold computations counter — the AnnIndexSpec memoization gate. */
   private[graft] val rowBoundMisses = new java.util.concurrent.atomic.AtomicLong
 

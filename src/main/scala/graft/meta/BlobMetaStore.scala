@@ -277,7 +277,6 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
     try {
       val dropped = tableExists(ns, t)
       if (dropped) {
-        SnapshotBodies.invalidateScope(metaDir(ns, t))
         BlobMetaStore.evictUnder(metaDir(ns, t))
         blobs.deleteTree(metaDir(ns, t))
         Seq(dataDir(ns, t), tableDir(ns, t)).foreach { d =>
@@ -293,7 +292,6 @@ class BlobMetaStore(blobs: CasBlobStore) extends MetaStore {
     if (!tableExists(fromNs, from)) throw noSuchTable(fromNs, from)
     if (!namespaceExists(toNs)) throw noSuchNamespace(toNs)
     if (tableExists(toNs, to)) throw tableExistsError(toNs, to)
-    SnapshotBodies.invalidateScope(metaDir(fromNs, from))
     BlobMetaStore.evictUnder(metaDir(fromNs, from))
     blobs.move(tableDir(fromNs, from), tableDir(toNs, to))
   }
@@ -351,41 +349,35 @@ object BlobMetaStore {
   // process-wide like the body cache (stores over one warehouse share
   // entries), in access order. An entry pins its snapshot bodies, so the
   // bound is small: about one current version per table in use.
-  private val Bound = 128
-  private val versions = new java.util.LinkedHashMap[String, Version](Bound, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, Version]): Boolean =
-      size > Bound
-  }
+  private val versions = new graft.Lru[String, Version](bound = 128)
 
   /** The metadata cached for `key`, if it was inflated from exactly
     * `bytes`: a version document rewritten in place (a table dropped and
     * recreated by another process) never hits a stale entry. */
   private def cached(key: String, bytes: Array[Byte]): Option[TableMetadata] =
-    versions.synchronized(Option(versions.get(key)))
-      .filter(v => java.util.Arrays.equals(v.bytes, bytes)).map(_.meta)
+    versions.get(key).filter(v => java.util.Arrays.equals(v.bytes, bytes)).map(_.meta)
 
   private def cache(key: String, bytes: Array[Byte], m: TableMetadata): Unit =
-    versions.synchronized(versions.put(key, new Version(bytes, m)))
+    versions.put(key, new Version(bytes, m))
 
   // metadata directory → the newest version number this process saw
   // there, where the next probe starts; process-wide and in access order
   // like the version cache. An entry is an int, so the bound is wide: a
   // table that falls out costs one listing.
-  private val SeenBound = 4096
-  private val seenVersions = new java.util.LinkedHashMap[String, Integer](SeenBound, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, Integer]): Boolean =
-      size > SeenBound
-  }
+  private val seenVersions = new graft.Lru[String, Int](bound = 4096)
 
   /** The newest version seen in metadata directory `dir`; 0 when none. */
-  private def seen(dir: String): Int = seenVersions.synchronized(seenVersions.getOrDefault(dir, 0))
+  private def seen(dir: String): Int = seenVersions.get(dir).getOrElse(0)
 
-  private def see(dir: String, v: Int): Unit = seenVersions.synchronized(seenVersions.put(dir, v))
+  private def see(dir: String, v: Int): Unit = seenVersions.put(dir, v)
 
-  /** Forget the newest version and every cached version of the metadata
-    * directory `dir`. */
+  /** Forget everything cached for metadata directory `dir` (table drop
+    * and rename): its snapshot bodies, its versions and its newest
+    * version. */
   private def evictUnder(dir: String): Unit = {
-    seenVersions.synchronized(seenVersions.remove(dir))
-    versions.synchronized(versions.keySet.removeIf(_.startsWith(s"$dir/")))
+    val under = (k: String) => k.startsWith(s"$dir/")
+    SnapshotBodies.cache.removeIf(under)
+    versions.removeIf(under)
+    seenVersions.removeIf(_ == dir)
   }
 }

@@ -66,6 +66,15 @@ object MetaJson {
       list(src.files, s.files) && map(src.fileStats, s.fileStats) &&
         list(src.deleteFiles, s.deleteFiles) && map(src.fileSeqs, s.fileSeqs)
     }
+
+    /** Whether `s`'s payload is the very instances these came from. */
+    def sameSource(s: SnapshotDef): Boolean =
+      (src.files eq s.files) && (src.fileStats eq s.fileStats) &&
+        (src.deleteFiles eq s.deleteFiles) && (src.fileSeqs eq s.fileSeqs)
+
+    /** The same fragments with `b`, an equal payload, as their source. */
+    def withSource(b: SnapshotBodies.Body): Fragments =
+      new Fragments(b, files, fileStats, deleteFiles, fileSeqs)
   }
 
   /** Render `b`'s payload values, one compact pass each. */
@@ -82,33 +91,29 @@ object MetaJson {
   // (another table's body of the same name, a snapshot whose payload
   // changed under its old ref) is rendered fresh and replaces the entry.
   private[meta] val FragmentChars = 32L << 20
-  private val kept = new java.util.LinkedHashMap[String, Fragments](64, 0.75f, true)
-  private var keptChars = 0L // guarded by kept
+  private val kept = new graft.Lru[String, Fragments](FragmentChars, _.chars)
 
   /** The fragments kept under `name`, if any. */
-  private[meta] def keptFragments(name: String): Option[Fragments] =
-    kept.synchronized(Option(kept.get(name)))
+  private[meta] def keptFragments(name: String): Option[Fragments] = kept.get(name)
 
   /** Keep `f` under the body name `name`, evicting the least recently
     * used fragments past the bound. */
-  private[meta] def keep(name: String, f: Fragments): Unit = kept.synchronized {
-    val old = kept.put(name, f)
-    if (old != null) keptChars -= old.chars
-    keptChars += f.chars
-    val eldest = kept.values.iterator
-    while (keptChars > FragmentChars && eldest.hasNext) {
-      keptChars -= eldest.next().chars
-      eldest.remove()
-    }
-  }
+  private[meta] def keep(name: String, f: Fragments): Unit = kept.put(name, f)
 
   /** The fragments of snapshot `s` with body name `name`: the kept ones
-    * when they render `s`, else rendered now and kept. */
+    * when they render `s`, else rendered now and kept. Kept fragments
+    * that render `s` only by equality (its payload was parsed again
+    * after the body cache let it go) are kept again with `s`'s own
+    * instances as their source, so later renders of `s` match by
+    * identity instead of comparing element by element. */
   private def fragments(name: String, s: SnapshotDef): Fragments =
-    keptFragments(name).filter(_.renders(s)).getOrElse {
-      val f = fragments(SnapshotBodies.Body(s.files, s.fileStats, s.deleteFiles, s.fileSeqs))
-      keep(name, f)
-      f
+    keptFragments(name) match {
+      case Some(k) if k.sameSource(s) => k
+      case held =>
+        val b = SnapshotBodies.Body(s.files, s.fileStats, s.deleteFiles, s.fileSeqs)
+        val f = held.filter(_.renders(s)).fold(fragments(b))(_.withSource(b))
+        keep(name, f)
+        f
     }
 
   private def render(pretty: Boolean)(write: JsonGenerator => Unit): String = {

@@ -53,23 +53,10 @@ object SnapshotBodies {
   // immutable; the bound only caps memory (entry count as a proxy —
   // histories are metadata-scale). Overflow evicts the least recently
   // used body, so a table that keeps being read keeps its bodies while
-  // colder tables' bodies stream through.
-  private val Bound = 512
-  private val cache = new java.util.LinkedHashMap[String, Body](Bound, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, Body]): Boolean =
-      size > Bound
-  }
-  private def cached(k: String): Option[Body] = cache.synchronized(Option(cache.get(k)))
-  private def cachePut(k: String, b: Body): Unit = cache.synchronized(cache.put(k, b))
-
-  /** Forget every cached body under `scope` — table drop/rename
-    * hygiene, so a recreated table at the same path can never hit a
-    * stale entry. (Reuse is existence-verified anyway; this keeps the
-    * cache from serving a deleted table's payloads.) */
-  def invalidateScope(scope: String): Unit = {
-    val prefix = s"$scope/"
-    cache.synchronized(cache.keySet.removeIf(_.startsWith(prefix)))
-  }
+  // colder tables' bodies stream through. Drop and rename forget a
+  // table's bodies (`BlobMetaStore.evictUnder`), so a recreated table at
+  // the same path never hits a stale entry.
+  private[meta] val cache = new graft.Lru[String, Body](bound = 512)
 
   private def same(b: Body, s: SnapshotDef): Boolean =
     ((b.files eq s.files) || b.files == s.files) &&
@@ -92,7 +79,7 @@ object SnapshotBodies {
     val reused = Seq.newBuilder[String]
     val slim = m.snapshots.map { s =>
       val reusable = s.bodyRef.exists(n =>
-        cached(s"$dir/$n").exists(same(_, s)))
+        cache.get(s"$dir/$n").exists(same(_, s)))
       val name = s.bodyRef.filter(_ => reusable) match {
         case Some(n) => reused += n; n
         case None =>
@@ -103,7 +90,7 @@ object SnapshotBodies {
           val bytes = MetaJson.body(fragments).getBytes(UTF_8)
           val n = s"snap-${s.snapshotId}-${hashHex(bytes)}.body.json"
           blobs.putIfAbsent(blobs.resolve(dir, n), bytes)
-          cachePut(s"$dir/$n", body)
+          cache.put(s"$dir/$n", body)
           MetaJson.keep(n, fragments)
           n
       }
@@ -126,7 +113,7 @@ object SnapshotBodies {
   private def heal(blobs: CasBlobStore, dir: String, names: Seq[String]): Unit =
     names.distinct.foreach { n =>
       val key = blobs.resolve(dir, n)
-      if (!blobs.contains(key)) cached(s"$dir/$n").foreach(b =>
+      if (!blobs.contains(key)) cache.get(s"$dir/$n").foreach(b =>
         blobs.putIfAbsent(key, MetaJson.body(b).getBytes(UTF_8)))
     }
 
@@ -143,7 +130,7 @@ object SnapshotBodies {
         case None => s
         case Some(n) =>
           val k = s"$scope/$n"
-          val body = cached(k).getOrElse {
+          val body = cache.get(k).getOrElse {
             val b =
               try Serialization.read[Body](read(n))
               catch {
@@ -153,7 +140,7 @@ object SnapshotBodies {
                       "unreadable — expired history, a pruned orphan, " +
                       "or a partially-restored warehouse", e)
               }
-            cachePut(k, b)
+            cache.put(k, b)
             b
           }
           s.copy(files = body.files, fileStats = body.fileStats,

@@ -171,25 +171,23 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
 
   // each table's loadTable body `{metadata-location, metadata, config}`
   // for its newest version rendered so far, in access order and at most
-  // LoadBodyBytes in all; `metadataEnd` is where the config member
-  // starts. A body is sent again while the store hands back the very
-  // instance it was rendered from (the store does so only while the
-  // version document's bytes are unchanged) with the same config. A load
-  // of an older version of the same table (one that raced a commit, or
+  // 32 MB in all; `metadataEnd` is where the config member starts. A
+  // body is sent again while the store hands back the very instance it
+  // was rendered from (the store does so only while the version
+  // document's bytes are unchanged) with the same config. A load of an
+  // older version of the same table (one that raced a commit, or
   // `?version=N`) is rendered but does not displace the newer body.
   private final class LoadBody(val version: Int, val m: TableMetadata,
                                val config: Map[String, String], val buf: BlockBuffer,
                                val metadataEnd: Long)
-  private val LoadBodyBytes = 32L << 20
-  private val loadBodies = new java.util.LinkedHashMap[(Seq[String], String), LoadBody](
-    16, 0.75f, true)
-  private var loadBodiesSize = 0L // guarded by loadBodies
+  private val loadBodies =
+    new graft.Lru[(Seq[String], String), LoadBody](bound = 32L << 20, _.buf.size)
 
   /** The loadTable body of version `v` of the table, rendered in one
     * pass unless the kept one is for this very instance. */
   private def loadBody(n: Seq[String], t: String, v: Int, m: TableMetadata,
                        config: Map[String, String]): LoadBody =
-    loadBodies.synchronized(Option(loadBodies.get((n, t))))
+    loadBodies.get((n, t))
       .filter(b => (b.m eq m) && b.version == v && b.config == config)
       .getOrElse {
         val buf = new BlockBuffer
@@ -208,19 +206,8 @@ final class RestServer(catalog: GraftCatalog, port: Int = 0,
         } finally g.close()
         buf.trim()
         val body = new LoadBody(v, m, config, buf, metadataEnd)
-        loadBodies.synchronized {
-          val kept = loadBodies.get((n, t))
-          if (kept == null || kept.m.tableUuid != m.tableUuid || kept.version <= v) {
-            if (kept != null) loadBodiesSize -= kept.buf.size
-            loadBodies.put((n, t), body)
-            loadBodiesSize += buf.size
-            val eldest = loadBodies.values.iterator
-            while (loadBodiesSize > LoadBodyBytes && eldest.hasNext) {
-              loadBodiesSize -= eldest.next().buf.size
-              eldest.remove()
-            }
-          }
-        }
+        loadBodies.put((n, t), body,
+          replaces = kept => kept.m.tableUuid != m.tableUuid || kept.version <= v)
         body
       }
 

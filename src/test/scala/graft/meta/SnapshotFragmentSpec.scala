@@ -115,6 +115,26 @@ class SnapshotFragmentSpec extends AnyFunSuite {
     assertSame(table(s))
   }
 
+  test("a hit by equality keeps the fragments again, from the snapshot's own instances") {
+    val name = s"snap-1-${java.util.UUID.randomUUID()}.body.json"
+    val s = SnapshotDef(1L, 0L, "append", List("a.parquet", "b.parquet"), Map.empty,
+      fileStats = Map("a.parquet" -> List(ColStatDef("id", "1", "9", 0L, Some(1), Some(9L)))),
+      fileSeqs = Map("a.parquet" -> 1L, "b.parquet" -> 1L), bodyRef = Some(name))
+    assertSame(table(s))
+    val first = MetaJson.keptFragments(name).get
+    // the same payload parsed again after the body cache let it go
+    val reparsed = copied(s)
+    assert(!(reparsed.files eq s.files) && reparsed.files == s.files)
+    assertSame(table(reparsed))
+    val kept = MetaJson.keptFragments(name).get
+    assert(kept.src.files eq reparsed.files)
+    assert(kept.src.fileStats eq reparsed.fileStats)
+    assert(kept.src.fileSeqs eq reparsed.fileSeqs)
+    assert(kept.files eq first.files, "the kept strings are reused, not rendered again")
+    assertSame(table(reparsed))
+    assert(MetaJson.keptFragments(name).get eq kept, "a hit by identity keeps the entry as it is")
+  }
+
   test("one body shared by two tables: persist keeps its fragments, both tables render them") {
     val store = new MetadataStore(Files.createTempDirectory("graft-frag-wh").toString)
     store.createNamespace(Seq("ns"), Map.empty)
